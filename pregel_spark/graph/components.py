@@ -22,11 +22,19 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tableio import CheckpointManager
 from .build import order_preserving_id_map, undirect, vertices_from_edges
-from .engine import PregelResult, ShuffleDelta, bsp_loop_confs, materialize
+from .engine import (
+    PregelResult,
+    ShuffleDelta,
+    Superstep,
+    bsp_loop_confs,
+    materialize,
+    materialize_step,
+    run_supersteps,
+)
 
 
 def connected_components(
@@ -38,159 +46,94 @@ def connected_components(
     run_id: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    numeric_ids: bool = True,
-    partition_metrics: bool | None = None,
 ) -> PregelResult:
     """Returns (id, component) — component = lexicographic min vertex id
     reachable treating edges as undirected.
 
-    ``numeric_ids``: run the loop on an ORDER-PRESERVING long mapping of
-    the string ids (``order_preserving_id_map``) — min-label semantics
-    survive because the mapping is monotone, the per-superstep shuffle
-    carries 8-byte keys instead of urls, and the final labels map back
-    to the identical strings.
+    The loop runs on an ORDER-PRESERVING long mapping of the string ids
+    (``order_preserving_id_map``) — min-label semantics survive because
+    the mapping is monotone, the per-superstep shuffle carries 8-byte
+    keys instead of urls, and the final labels map back to the
+    identical strings.
     """
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
-    if partition_metrics is None:
-        partition_metrics = ckpt is not None  # see pagerank.py rationale
 
-    ue = undirect(edges).select("src", "dst")
-    vmap = None
-    if numeric_ids:
-        vmap = materialize(
-            order_preserving_id_map(vertices_from_edges(edges), n_part)
-            .repartition(n_part, "vid")
-        )
-        ue = (
-            ue.join(vmap.withColumnRenamed("id", "src"), "src")
-            .select(F.col("vid").alias("src"), "dst")
-            .join(vmap.withColumnRenamed("id", "dst"), "dst")
-            .select("src", F.col("vid").alias("dst"))
-        )
-    ue = materialize(ue.repartition(n_part, "src"))
+    vmap = materialize(
+        order_preserving_id_map(vertices_from_edges(edges), n_part)
+        .repartition(n_part, "vid")
+    )
+    ue = materialize(
+        undirect(edges)
+        .select("src", "dst")
+        .join(vmap.withColumnRenamed("id", "src"), "src")
+        .select(F.col("vid").alias("src"), "dst")
+        .join(vmap.withColumnRenamed("id", "dst"), "dst")
+        .select("src", F.col("vid").alias("dst"))
+        .repartition(n_part, "src")
+    )
     # labels cover ALL vertices of the original edge table (including
     # self-loop-only vertices that undirect() drops as edges)
-    if vmap is not None:
-        verts0 = vmap.select(F.col("vid").alias("id"))
-    else:
-        verts0 = vertices_from_edges(edges)
     labels = materialize(
-        verts0.select("id", F.col("id").alias("component"))
+        vmap.select(F.col("vid").alias("id"), F.col("vid").alias("component"))
         .repartition(n_part, "id")
     )
-    frontier = labels  # superstep 1: every vertex announces its label
 
-    start_step, metrics = 1, []
-    part_metrics: list[dict] = []
-    n_metrics_appended = 0
-    n_pmetrics_appended = 0
-    if resume and ckpt is not None:
-        latest = ckpt.latest()
-        if latest is not None:
-            st, fr, _meta = ckpt.load(spark, latest)
-            labels = materialize(st.repartition(n_part, "id"))
-            frontier = materialize(fr.repartition(n_part, "id")) if fr is not None else None
-            start_step = latest + 1
-
-    shufd = ShuffleDelta(spark)
-    with bsp_loop_confs(spark):
-        converged = False
-        superstep = start_step - 1
-        for superstep in range(start_step, max_iter + 1):
-            if frontier is None:
-                converged = True
-                superstep -= 1
-                break
-            t0 = time.monotonic()
-            # scatter J2 + min-combine A1 (combiner = min, pregel/queue.lua:39-52)
-            msgs = ue.join(frontier.withColumnRenamed("id", "src"), "src").select(
-                F.col("dst").alias("id"), F.col("component").alias("cand")
-            )
-            mins = msgs.groupBy("id").agg(F.min("cand").alias("cand"))
-            joined = labels.join(mins, "id", "left_outer")
-            step_plan = joined.select(
-                "id",
-                F.least(F.col("component"), F.coalesce("cand", F.col("component"))).alias(
-                    "component"
-                ),
-                (
-                    F.col("cand").isNotNull() & (F.col("cand") < F.col("component"))
-                ).alias("_changed"),
-            )
-            # changed-count rides the materialization action itself
-            # unless per-partition I5 stats are requested
-            obs = None
-            if not partition_metrics:
-                obs = Observation(f"chg_{run_id}_{superstep}")
-                step_plan = step_plan.observe(
-                    obs, F.sum(F.col("_changed").cast("long")).alias("chg")
-                )
-            nxt = materialize(step_plan)
-            # changed-count grouped by physical partition: same single
-            # action, plus the I5 per-partition rows (checkpointed runs)
-            if partition_metrics:
-                prows = nxt.groupBy(F.spark_partition_id().alias("pid")).agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.when(F.col("_changed"), 1).otherwise(0)).alias("changed"),
-                ).collect()
-                changed = sum(r["changed"] or 0 for r in prows)
-                part_metrics.extend(
-                    {
-                        "run_id": run_id,
-                        "superstep": superstep,
-                        "partition_id": r["pid"],
-                        "rows": r["rows"],
-                    }
-                    for r in prows
-                )
-            else:
-                changed = int(obs.get["chg"] or 0)
-            labels = nxt.select("id", "component")
-            frontier = nxt.filter(F.col("_changed")).select(
-                "id", "component"
-            ) if changed else None
-            metrics.append(
-                {
-                    "run_id": run_id,
-                    "superstep": superstep,
-                    "wall_ms": (time.monotonic() - t0) * 1000,
-                    "changed": changed,
-                    **shufd.sample(),
-                }
-            )
-            if ckpt is not None and (superstep % checkpoint_interval == 0 or changed == 0):
-                ckpt.save(superstep, labels, frontier, meta={"changed": changed})
-                ckpt.append_metrics(spark, metrics[n_metrics_appended:])
-                n_metrics_appended = len(metrics)
-                ckpt.append_partition_metrics(spark, part_metrics[n_pmetrics_appended:])
-                n_pmetrics_appended = len(part_metrics)
-            if changed == 0:
-                converged = True
-                break
-
-    if vmap is not None:
-        labels = (
-            labels.withColumnRenamed("id", "_v")
-            .join(vmap.withColumnRenamed("vid", "_v"), "_v")
-            .withColumnRenamed("component", "_c")
-            .join(
-                vmap.select(
-                    F.col("vid").alias("_c"), F.col("id").alias("component")
-                ),
-                "_c",
-            )
-            .select("id", "component")
+    def step(superstep, labels, frontier, _meta):
+        # scatter J2 + min-combine A1 (combiner = min, pregel/queue.lua:39-52)
+        msgs = ue.join(frontier.withColumnRenamed("id", "src"), "src").select(
+            F.col("dst").alias("id"), F.col("component").alias("cand")
         )
-    return PregelResult(
-        vertices=labels,
-        supersteps=superstep,
-        converged=converged,
-        metrics=metrics,
-        run_id=run_id,
-        partition_metrics=part_metrics,
+        mins = msgs.groupBy("id").agg(F.min("cand").alias("cand"))
+        plan = labels.join(mins, "id", "left_outer").select(
+            "id",
+            F.least(F.col("component"), F.coalesce("cand", F.col("component"))).alias(
+                "component"
+            ),
+            (
+                F.col("cand").isNotNull() & (F.col("cand") < F.col("component"))
+            ).alias("_changed"),
+        )
+        nxt, stats, parts = materialize_step(
+            plan, ckpt is not None, changed=("sum", F.col("_changed").cast("long"))
+        )
+        changed = stats["changed"]
+        return Superstep(
+            nxt.select("id", "component"),
+            stats,
+            changed == 0,
+            # only improved vertices scatter next superstep (F2)
+            second=nxt.filter(F.col("_changed")).select("id", "component")
+            if changed else None,
+            partitions=parts,
+        )
+
+    with bsp_loop_confs(spark):
+        # superstep 1: every vertex announces its label
+        res = run_supersteps(
+            step,
+            labels,
+            second=labels,
+            run_id=run_id,
+            max_steps=max_iter,
+            num_partitions=n_part,
+            ckpt=ckpt,
+            checkpoint_interval=checkpoint_interval,
+            resume=resume,
+        )
+
+    res.vertices = (
+        res.vertices.withColumnRenamed("id", "_v")
+        .join(vmap.withColumnRenamed("vid", "_v"), "_v")
+        .withColumnRenamed("component", "_c")
+        .join(
+            vmap.select(F.col("vid").alias("_c"), F.col("id").alias("component")),
+            "_c",
+        )
+        .select("id", "component")
     )
+    return res
 
 
 def _star_round(e: DataFrame, large: bool) -> DataFrame:

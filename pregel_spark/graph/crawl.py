@@ -95,8 +95,7 @@ def incremental_components(
     surviving edge set.
 
     ``**kw`` forwards ``connected_components`` knobs (checkpointing,
-    ``numeric_ids``, partition metrics, ...). Returns its
-    ``PregelResult``.
+    partitions, ``max_iter``). Returns its ``PregelResult``.
     """
     from .components import connected_components
 

@@ -27,7 +27,15 @@ The mapping, operator by operator:
   30, ``example/test-worker.lua:29``); superstep numbering starts at 1
   (``pregel/master.lua:57``);
 - snapshots (``pregel/master.lua:101-103``) -> per-superstep parquet
-  checkpoints via ``CheckpointManager``, resumable.
+  checkpoints via ``CheckpointManager``, resumable;
+- the master loop itself -> :func:`run_supersteps`, one driver shared by
+  the generic tier and the native PageRank / CC / LPA kernels: superstep
+  numbering, per-superstep metrics rows, checkpoint cadence, resume and
+  the convergence break. :func:`materialize_step` is its per-superstep
+  barrier: the ``localCheckpoint`` that cuts lineage also carries the
+  convergence counts and aggregators as ``observe()`` metrics, so a
+  native superstep is one action (checkpointed runs add one tiny
+  per-partition collect for the I5 rows).
 
 Scale notes: every loop-carried DataFrame is ``localCheckpoint``-ed
 each superstep — lineage truncation is mandatory for iterative Spark
@@ -46,7 +54,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..tableio import CheckpointManager
 from .build import adjacency as build_adjacency
@@ -113,6 +121,14 @@ def materialize(df: DataFrame) -> DataFrame:
     rely on this. Inherited plan statistics are clamped — see
     :func:`_clamp_checkpoint_stats` for the BigInt-squaring stall this
     prevents.
+
+    Lineage must be cut EVERY superstep: BSP state is referenced
+    twice per superstep (gather join + message derivation), so an
+    uncut (``persist``-ed) logical plan doubles in tree size each
+    superstep — measured: exponential planning time and a driver
+    ``OutOfMemoryError`` in ``TreeNode.generateTreeString`` within ~30
+    supersteps. A checkpointed table is left to the ContextCleaner
+    (unpersisting a localCheckpointed RDD would drop its only data).
 
     AQE caveat (measured, round 4): the guarantee above holds only
     when the checkpoint is PLANNED with AQE off — an
@@ -244,56 +260,6 @@ def bsp_loop_confs(spark: SparkSession):
             spark.conf.set(k, v)
 
 
-class StepMaterializer:
-    """Per-superstep materialization policy for loop-carried DataFrames.
-
-    ``localCheckpoint`` truncates lineage and (measured on Spark 4.1,
-    see ``materialize``) PRESERVES the physical ``outputPartitioning``
-    — a state table checkpointed after ``repartition(n, key)`` re-joins
-    on ``key`` with one exchange on the other side only. ``persist``
-    keeps the logical plan — but in a BSP superstep the new state references the
-    old state TWICE (gather join + message derivation), so an uncut
-    logical plan DOUBLES in tree size every superstep: measured
-    consequence is exponential planning time and a driver
-    ``OutOfMemoryError`` in ``TreeNode.generateTreeString`` within
-    ~30 supersteps. Lineage must therefore be cut EVERY superstep for
-    state that is multiply-referenced (``cut_interval=1``, the
-    default); ``cut_interval>1`` is only safe for linear chains.
-
-    Persisted predecessors are unpersisted once their successor is
-    materialized; checkpointed ones are left for the ContextCleaner
-    (unpersisting a localCheckpointed RDD would drop its only data).
-    """
-
-    def __init__(self, cut_interval: int = 1):
-        self.cut_interval = max(1, cut_interval)
-        self._prev: DataFrame | None = None
-        self._prev_was_persist = False
-
-    def step(self, df: DataFrame, superstep: int) -> DataFrame:
-        cut = superstep % self.cut_interval == 0
-        if cut:
-            out = _clamp_checkpoint_stats(df.localCheckpoint(eager=True))
-        else:
-            out = df.persist()
-        return out
-
-    def advance(
-        self, new_df: DataFrame, superstep: int, persisted: bool | None = None
-    ) -> None:
-        """Call AFTER an action has filled new_df's cache. ``persisted``
-        overrides the superstep-derived inference for frames that were
-        not produced by :meth:`step` (e.g. an initial ``.persist()``-ed
-        state seeded before the loop — inferring from ``superstep %
-        cut_interval`` would mark it checkpointed and leak its cache)."""
-        if self._prev is not None and self._prev_was_persist:
-            self._prev.unpersist()
-        self._prev = new_df
-        if persisted is None:
-            persisted = superstep % self.cut_interval != 0
-        self._prev_was_persist = persisted
-
-
 @dataclass
 class ComputeContext:
     """What the reference exposes via the vertex API, minus the vertex
@@ -354,6 +320,150 @@ _COMBINERS: dict[str, Callable[[Column], Column]] = {
     "max": F.max,
     "min": F.min,
 }
+_FOLDS = {"sum": sum, "max": max, "min": min}
+
+
+def materialize_step(
+    plan: DataFrame, per_partition: bool, **stats: tuple[str, Column]
+) -> tuple[DataFrame, dict, list[dict]]:
+    """Materialize one superstep's plan; returns ``(table, stats,
+    partitions)``.
+
+    ``stats`` maps a name to ``(fold, column)``, fold one of ``sum`` /
+    ``max`` / ``min``; a fold over no non-null value reads 0. Without
+    ``per_partition`` the stats ride the materialization itself as
+    ``observe()`` metrics — one action per superstep. With it (the
+    checkpointed runs) a ``groupBy(spark_partition_id)`` collect over
+    the materialized table folds the same stats from one tiny row per
+    physical partition, and also yields the I5 per-partition row
+    counts (the reference's per-worker superstep log,
+    ``pregel/master.lua:60-63``) as ``{"partition_id", "rows"}``."""
+    aggs = [_COMBINERS[fold](col).alias(k) for k, (fold, col) in stats.items()]
+    if not per_partition:
+        obs = Observation()
+        out = materialize(plan.observe(obs, *aggs))
+        got = obs.get
+        return out, {k: got[k] or 0 for k in stats}, []
+    out = materialize(plan)
+    rows = out.groupBy(F.spark_partition_id().alias("pid")).agg(
+        F.count(F.lit(1)).alias("rows"), *aggs
+    ).collect()
+    folded = {}
+    for k, (fold, _) in stats.items():
+        vals = [r[k] for r in rows if r[k] is not None]
+        folded[k] = _FOLDS[fold](vals) if vals else 0
+    parts = [{"partition_id": r["pid"], "rows": r["rows"]} for r in rows]
+    return out, folded, parts
+
+
+@dataclass
+class Superstep:
+    """One superstep's output, as :func:`run_supersteps` consumes it.
+
+    ``state`` and ``second`` (an optional second loop-carried table: a
+    frontier, an outbox) are what the next superstep reads and what a
+    checkpoint saves; ``meta`` holds the loop-carried driver scalars
+    (global aggregators); ``stats`` are this superstep's metrics-row
+    scalars; ``done`` is the convergence test."""
+
+    state: DataFrame
+    stats: dict
+    done: bool
+    second: DataFrame | None = None
+    meta: dict = field(default_factory=dict)
+    partitions: list[dict] = field(default_factory=list)
+
+
+def run_supersteps(
+    step: Callable[[int, DataFrame, DataFrame | None, dict], Superstep],
+    state: DataFrame,
+    *,
+    run_id: str,
+    max_steps: int,
+    num_partitions: int,
+    second: DataFrame | None = None,
+    meta: dict | None = None,
+    ckpt: CheckpointManager | None = None,
+    checkpoint_interval: int = 5,
+    resume: bool = False,
+) -> PregelResult:
+    """The master loop (``pregel/master.lua:54-88``) shared by every
+    superstep loop: ``step(superstep, state, second, meta)`` builds and
+    materializes one superstep, and this driver owns the rest.
+
+    - Resume: with ``resume`` and a completed checkpoint, the latest
+      one's state, second table and meta replace the arguments
+      (re-hashed on ``id`` into ``num_partitions``); a checkpoint of the
+      converging superstep returns at once.
+    - Numbering from 1 (``pregel/master.lua:57``) up to ``max_steps``,
+      with each superstep's ``wall_ms`` and its metrics row (plus
+      shuffle deltas when the UI is on, :class:`ShuffleDelta`).
+    - Snapshots (``pregel/master.lua:101-103``): every
+      ``checkpoint_interval`` supersteps and on the converging one, the
+      state, second table and ``meta`` + ``stats`` + ``converged`` are
+      saved, then the metrics and per-partition rows not yet persisted
+      are appended — each row once, also across a resume.
+    - The convergence break.
+
+    Callers enter ``bsp_loop_confs`` around the call and map
+    ``vertices`` of the returned result back to their output shape."""
+    spark = state.sparkSession
+    meta = meta or {}
+    start = 1
+    latest = ckpt.latest() if resume and ckpt is not None else None
+    if latest is not None:
+        st, sec, meta = ckpt.load(spark, latest)
+        state = materialize(st.repartition(num_partitions, "id"))
+        second = (
+            materialize(sec.repartition(num_partitions, "id"))
+            if sec is not None else None
+        )
+        if meta.get("converged"):
+            return PregelResult(state, latest, True, run_id=run_id)
+        start = latest + 1
+
+    metrics: list[dict] = []
+    parts: list[dict] = []
+    n_saved = n_parts_saved = 0  # high-water marks: each row appended once
+    shufd = ShuffleDelta(spark)
+    converged = False
+    superstep = start - 1
+    for superstep in range(start, max_steps + 1):
+        t0 = time.monotonic()
+        out = step(superstep, state, second, meta)
+        state, second, meta = out.state, out.second, out.meta
+        metrics.append(
+            {
+                "run_id": run_id,
+                "superstep": superstep,
+                "wall_ms": (time.monotonic() - t0) * 1000,
+                **out.stats,
+                **shufd.sample(),
+            }
+        )
+        parts.extend(
+            {"run_id": run_id, "superstep": superstep, **p} for p in out.partitions
+        )
+        if ckpt is not None and (superstep % checkpoint_interval == 0 or out.done):
+            ckpt.save(
+                superstep, state, second,
+                meta={**meta, **out.stats, "converged": out.done},
+            )
+            ckpt.append_metrics(spark, metrics[n_saved:])
+            n_saved = len(metrics)
+            ckpt.append_partition_metrics(spark, parts[n_parts_saved:])
+            n_parts_saved = len(parts)
+        if out.done:
+            converged = True
+            break
+    return PregelResult(
+        vertices=state,
+        supersteps=superstep,
+        converged=converged,
+        metrics=metrics,
+        run_id=run_id,
+        partition_metrics=parts,
+    )
 
 
 class Pregel:
@@ -514,158 +624,111 @@ class Pregel:
                 build_adjacency(cur_edges).repartition(n_part, "src")
             )
 
-        start_step = 1
         agg_values = {k: v[0] for k, v in (aggregators or {}).items()}
         state = materialize(self.vertices.repartition(n_part, "id"))
         n_vertices = state.count()
-        msgs = initial_msgs
-        metrics: list[dict] = []
-        part_metrics: list[dict] = []
-        n_metrics_appended = 0  # high-water mark: each row is appended once
-        n_pmetrics_appended = 0
-
-        if resume and self.ckpt is not None:
-            latest = self.ckpt.latest()
-            if latest is not None:
-                st, ms, meta = self.ckpt.load(spark, latest)
-                state = materialize(st.repartition(n_part, "id"))
-                msgs = materialize(ms.repartition(n_part, "id")) if ms is not None else None
-                agg_values = meta.get("aggregators", agg_values)
-                n_vertices = meta.get("num_vertices", n_vertices)
-                start_step = latest + 1
-
         user_bc = (
             spark.sparkContext.broadcast(self.worker_context)
             if self.worker_context is not None
             else None
         )
-        with bsp_loop_confs(spark):
-            converged = False
-            superstep = start_step - 1
-            for superstep in range(start_step, max_supersteps + 1):
-                t0 = time.monotonic()
-                if msgs is not None:
-                    inbox = self._aggregate_inbox(msgs, combiner)
-                    joined = state.join(inbox, "id", "left_outer")
-                else:
-                    joined = state.withColumn(
-                        "msgs", F.lit(None).cast(f"array<{msg_type}>")
-                    )
-                participate = (~F.col("halted")) | F.col("msgs").isNotNull()
-                passthrough = joined.filter(~participate).select("id", "value", "halted")
-                active_in = joined.filter(participate).withColumn(
-                    "halted", F.lit(False)
-                )  # wake-before-compute (pregel/worker.lua:158)
-                if adj is not None:
-                    active_in = active_in.join(
-                        adj.withColumnRenamed("src", "id"), "id", "left_outer"
-                    )
-
-                ctx = ComputeContext(superstep, dict(agg_values), n_vertices, user_bc)
-                out_cols = ["id", "value", "halted", "out"] + (
-                    ["muts"] if with_mutations else []
-                )
-                _fn = _make_apply_fn(compute, ctx, out_cols)
-
-                computed = (
-                    active_in.groupBy(
-                        F.pmod(F.xxhash64("id"), F.lit(n_part)).alias("_bucket")
-                    )
-                    .applyInPandas(_fn, schema=out_schema)
-                )
-                computed = materialize(computed.repartition(n_part, "id"))
-
-                new_state = computed.select("id", "value", "halted").unionByName(
-                    passthrough
-                )
-                vertex_set_mutated = False
-                if with_mutations:
-                    mut_rows = materialize(
-                        computed.select(F.explode("muts").alias("m")).select("m.*")
-                    )
-                    if mut_rows.count() > 0:
-                        new_state, cur_edges, adj = self._apply_barrier_mutations(
-                            new_state, cur_edges, mut_rows, value_type,
-                            with_adjacency, n_part,
-                        )
-                        # add/delete-vertex changes N for every later
-                        # superstep (ComputeContext.num_vertices and the
-                        # checkpointed meta that resume trusts)
-                        vertex_set_mutated = (
-                            mut_rows.filter(F.col("kind").isin(1, 2)).count() > 0
-                        )
-                state = materialize(new_state.repartition(n_part, "id"))
-                if vertex_set_mutated:
-                    n_vertices = state.count()
-                msgs = materialize(
-                    computed.select(F.explode("out").alias("o"))
-                    .select(F.col("o.dst").alias("id"), F.col("o.msg").alias("msg"))
-                    .filter(F.col("id").isNotNull())
-                    .repartition(n_part, "id")
-                )
-
-                msg_cnt = msgs.count()
-                # active count grouped by physical partition: same single
-                # action as a global count, plus the I5 per-partition rows
-                srows = state.groupBy(F.spark_partition_id().alias("pid")).agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.when(~F.col("halted"), 1).otherwise(0)).alias("active"),
-                ).collect()
-                active_cnt = sum(r["active"] or 0 for r in srows)
-                part_metrics.extend(
-                    {
-                        "run_id": self.run_id,
-                        "superstep": superstep,
-                        "partition_id": r["pid"],
-                        "rows": r["rows"],
-                    }
-                    for r in srows
-                )
-                if aggregators:
-                    row = state.agg(
-                        *[fn(state).alias(k) for k, (_, fn) in aggregators.items()]
-                    ).collect()[0]
-                    agg_values = {k: row[k] for k in aggregators}
-                wall_ms = (time.monotonic() - t0) * 1000
-                metrics.append(
-                    {
-                        "run_id": self.run_id,
-                        "superstep": superstep,
-                        "wall_ms": wall_ms,
-                        "msgs_out": msg_cnt,
-                        "active": active_cnt,
-                    }
-                )
-                if self.ckpt is not None and (
-                    superstep % self.checkpoint_interval == 0
-                    or (msg_cnt == 0 and active_cnt == 0)
-                ):
-                    self.ckpt.save(
-                        superstep,
-                        state,
-                        msgs,
-                        meta={
-                            "aggregators": agg_values,
-                            "num_vertices": n_vertices,
-                            "msgs_out": msg_cnt,
-                            "active": active_cnt,
-                        },
-                    )
-                    self.ckpt.append_metrics(spark, metrics[n_metrics_appended:])
-                    n_metrics_appended = len(metrics)
-                    self.ckpt.append_partition_metrics(
-                        spark, part_metrics[n_pmetrics_appended:]
-                    )
-                    n_pmetrics_appended = len(part_metrics)
-                if msg_cnt == 0 and active_cnt == 0:
-                    converged = True
-                    break
-
-        return PregelResult(
-            vertices=state,
-            supersteps=superstep,
-            converged=converged,
-            metrics=metrics,
-            run_id=self.run_id,
-            partition_metrics=part_metrics,
+        out_cols = ["id", "value", "halted", "out"] + (
+            ["muts"] if with_mutations else []
         )
+
+        def step(superstep, state, msgs, meta):
+            nonlocal cur_edges, adj
+            agg_values, n_vertices = meta["aggregators"], meta["num_vertices"]
+            if msgs is not None:
+                inbox = self._aggregate_inbox(msgs, combiner)
+                joined = state.join(inbox, "id", "left_outer")
+            else:
+                joined = state.withColumn(
+                    "msgs", F.lit(None).cast(f"array<{msg_type}>")
+                )
+            participate = (~F.col("halted")) | F.col("msgs").isNotNull()
+            passthrough = joined.filter(~participate).select("id", "value", "halted")
+            active_in = joined.filter(participate).withColumn(
+                "halted", F.lit(False)
+            )  # wake-before-compute (pregel/worker.lua:158)
+            if adj is not None:
+                active_in = active_in.join(
+                    adj.withColumnRenamed("src", "id"), "id", "left_outer"
+                )
+
+            ctx = ComputeContext(superstep, dict(agg_values), n_vertices, user_bc)
+            _fn = _make_apply_fn(compute, ctx, out_cols)
+            computed = (
+                active_in.groupBy(
+                    F.pmod(F.xxhash64("id"), F.lit(n_part)).alias("_bucket")
+                )
+                .applyInPandas(_fn, schema=out_schema)
+            )
+            computed = materialize(computed.repartition(n_part, "id"))
+
+            new_state = computed.select("id", "value", "halted").unionByName(
+                passthrough
+            )
+            vertex_set_mutated = False
+            if with_mutations:
+                mut_rows = materialize(
+                    computed.select(F.explode("muts").alias("m")).select("m.*")
+                )
+                if mut_rows.count() > 0:
+                    new_state, cur_edges, adj = self._apply_barrier_mutations(
+                        new_state, cur_edges, mut_rows, value_type,
+                        with_adjacency, n_part,
+                    )
+                    # add/delete-vertex changes N for every later
+                    # superstep (ComputeContext.num_vertices and the
+                    # checkpointed meta that resume trusts)
+                    vertex_set_mutated = (
+                        mut_rows.filter(F.col("kind").isin(1, 2)).count() > 0
+                    )
+            state = materialize(new_state.repartition(n_part, "id"))
+            if vertex_set_mutated:
+                n_vertices = state.count()
+            msgs = materialize(
+                computed.select(F.explode("out").alias("o"))
+                .select(F.col("o.dst").alias("id"), F.col("o.msg").alias("msg"))
+                .filter(F.col("id").isNotNull())
+                .repartition(n_part, "id")
+            )
+
+            msg_cnt = msgs.count()
+            # active count grouped by physical partition: same single
+            # action as a global count, plus the I5 per-partition rows
+            srows = state.groupBy(F.spark_partition_id().alias("pid")).agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.when(~F.col("halted"), 1).otherwise(0)).alias("active"),
+            ).collect()
+            active_cnt = sum(r["active"] or 0 for r in srows)
+            if aggregators:
+                row = state.agg(
+                    *[fn(state).alias(k) for k, (_, fn) in aggregators.items()]
+                ).collect()[0]
+                agg_values = {k: row[k] for k in aggregators}
+            return Superstep(
+                state,
+                {"msgs_out": msg_cnt, "active": active_cnt},
+                msg_cnt == 0 and active_cnt == 0,
+                second=msgs,
+                meta={"aggregators": agg_values, "num_vertices": n_vertices},
+                partitions=[
+                    {"partition_id": r["pid"], "rows": r["rows"]} for r in srows
+                ],
+            )
+
+        with bsp_loop_confs(spark):
+            return run_supersteps(
+                step,
+                state,
+                second=initial_msgs,
+                meta={"aggregators": agg_values, "num_vertices": n_vertices},
+                run_id=self.run_id,
+                max_steps=max_supersteps,
+                num_partitions=n_part,
+                ckpt=self.ckpt,
+                checkpoint_interval=self.checkpoint_interval,
+                resume=resume,
+            )

@@ -42,7 +42,6 @@ from .build import vertices_from_edges
 from .engine import (
     PregelResult,
     ShuffleDelta,
-    StepMaterializer,
     bsp_loop_confs,
     materialize,
 )
@@ -98,8 +97,6 @@ def hits(
             "id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
         ).repartition(n_part, "id")
     )
-    stepm = StepMaterializer()
-    stepm.advance(state, superstep=1, persisted=False)
 
     start_step, metrics = 1, []
     n_metrics_appended = 0
@@ -108,7 +105,6 @@ def hits(
         if latest is not None:
             st, _, _meta = ckpt.load(spark, latest)
             state = materialize(st.repartition(n_part, "id"))
-            stepm.advance(state, superstep=latest, persisted=False)
             start_step = latest + 1
 
     converged = False
@@ -144,7 +140,7 @@ def hits(
                 .groupBy("src")
                 .agg(F.sum("ar").alias("hr"))
             )
-            nxt = stepm.step(
+            nxt = materialize(
                 with_ar.join(hr.withColumnRenamed("src", "id"), "id", "left_outer")
                 .select(
                     "id",
@@ -152,8 +148,7 @@ def hits(
                     "hub",
                     "ar",
                     F.coalesce("hr", F.lit(0.0)).alias("hr"),
-                ),
-                superstep,
+                )
             )
             # one tiny pass for the two L2 norms, then one for the
             # convergence deltas (both scans of the checkpointed O(V)
@@ -178,7 +173,6 @@ def hits(
                 max_delta = drow["d"] or 0.0
             else:
                 max_delta = float("nan")
-            stepm.advance(nxt, superstep)
             state = nxt.select("id", new_auth, new_hub)
             metrics.append(
                 {
@@ -287,8 +281,6 @@ def salsa(
         )
         .repartition(n_part, "id")
     )
-    stepm = StepMaterializer()
-    stepm.advance(state, superstep=1, persisted=False)
     metrics = []
     shufd = ShuffleDelta(spark)
     superstep = 0
@@ -317,7 +309,7 @@ def salsa(
                 .groupBy("src")
                 .agg(F.sum(F.col("c") / F.col("indeg")).alias("h2"))
             )
-            nxt = stepm.step(
+            nxt = materialize(
                 verts.join(a2.withColumnRenamed("dst", "id"), "id", "left")
                 .join(h2.withColumnRenamed("src", "id"), "id", "left")
                 .select(
@@ -325,10 +317,8 @@ def salsa(
                     F.coalesce("a2", F.lit(0.0)).alias("authority"),
                     F.coalesce("h2", F.lit(0.0)).alias("hub"),
                 )
-                .repartition(n_part, "id"),
-                superstep,
+                .repartition(n_part, "id")
             )
-            stepm.advance(nxt, superstep)
             state = nxt
             metrics.append(
                 {

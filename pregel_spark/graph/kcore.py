@@ -46,7 +46,6 @@ from .build import undirect, vertices_from_edges
 from .engine import (
     PregelResult,
     ShuffleDelta,
-    StepMaterializer,
     bsp_loop_confs,
     materialize,
 )
@@ -83,8 +82,6 @@ def k_core(
 
     alive = materialize(vertices_from_edges(ue).repartition(n_part, "id"))
     n_alive = alive.count()
-    stepm = StepMaterializer()
-    stepm.advance(alive, superstep=1, persisted=False)
 
     metrics: list[dict] = []
     n_metrics_appended = 0
@@ -95,7 +92,6 @@ def k_core(
         if latest is not None:
             st, _, meta = ckpt.load(spark, latest)
             alive = materialize(st.repartition(n_part, "id"))
-            stepm.advance(alive, superstep=latest, persisted=False)
             n_alive = meta["survivors"]
             rounds = latest
     shufd = ShuffleDelta(spark)
@@ -113,15 +109,13 @@ def k_core(
             )
             # survivor count rides the checkpoint action via observe()
             obs = Observation(f"nk_{run_id}_{rounds}")
-            nxt = stepm.step(
+            nxt = materialize(
                 cnt.join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
                 .filter(F.col("deg") >= k)
                 .select(F.col("dst").alias("id"))
-                .observe(obs, F.count(F.lit(1)).alias("n")),
-                rounds,
+                .observe(obs, F.count(F.lit(1)).alias("n"))
             )
             n_next = int(obs.get["n"] or 0)
-            stepm.advance(nxt, rounds)
             alive = nxt
             metrics.append(
                 {
@@ -214,8 +208,6 @@ def coreness(
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .repartition(n_part, "id")
     )
-    stepm = StepMaterializer()
-    stepm.advance(cur, superstep=1, persisted=False)
     prev_sum = cur.agg(F.sum("c")).collect()[0][0]
 
     metrics: list[dict] = []
@@ -231,15 +223,13 @@ def coreness(
                 cur.select(F.col("id").alias("dst"), F.col("c").alias("val")),
                 "dst",
             ).select("src", "val")
-            nxt = stepm.step(
+            nxt = materialize(
                 gathered.withColumn("rn", F.row_number().over(w))
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.max(F.least(F.col("rn").cast("long"), F.col("val"))).alias("c"))
-                .repartition(n_part, "id"),
-                rounds,
+                .repartition(n_part, "id")
             )
             new_sum = nxt.agg(F.sum("c")).collect()[0][0]
-            stepm.advance(nxt, rounds)
             cur = nxt
             metrics.append(
                 {

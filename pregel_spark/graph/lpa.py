@@ -49,14 +49,20 @@ explicitly when the convergence profile has a long tail.
 
 from __future__ import annotations
 
-import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tableio import CheckpointManager
 from .build import order_preserving_id_map, undirect, vertices_from_edges
-from .engine import PregelResult, ShuffleDelta, bsp_loop_confs, materialize
+from .engine import (
+    PregelResult,
+    Superstep,
+    bsp_loop_confs,
+    materialize,
+    materialize_step,
+    run_supersteps,
+)
 
 
 def label_propagation(
@@ -68,14 +74,11 @@ def label_propagation(
     run_id: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    numeric_ids: bool = True,
-    argmax: str = "struct",
-    partition_metrics: bool | None = None,
     mode: str = "auto",
 ) -> PregelResult:
     """Returns (id, label) after synchronous LPA.
 
-    ``numeric_ids``: loop on the order-preserving long mapping (see
+    The loop runs on the order-preserving long mapping (see
     ``connected_components``) — the mode count is relabel-invariant and
     the min tie-break survives a monotone mapping, so assignments are
     byte-identical after mapping back.
@@ -90,185 +93,90 @@ def label_propagation(
         raise ValueError(
             f"unknown mode {mode!r}: expected 'auto', 'rescatter' or 'frontier'"
         )
-    if mode == "frontier" and not numeric_ids:
-        raise ValueError("mode='frontier' requires numeric_ids=True")
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
-    if partition_metrics is None:
-        partition_metrics = ckpt is not None  # see pagerank.py rationale
 
-    ue = undirect(edges).select("src", "dst")
-    vmap = None
-    if numeric_ids:
-        vmap = materialize(
-            order_preserving_id_map(vertices_from_edges(edges), n_part)
-            .repartition(n_part, "vid")
-        )
-        ue = (
-            ue.join(vmap.withColumnRenamed("id", "src"), "src")
-            .select(F.col("vid").alias("src"), "dst")
-            .join(vmap.withColumnRenamed("id", "dst"), "dst")
-            .select("src", F.col("vid").alias("dst"))
-        )
-    ue = materialize(ue.repartition(n_part, "src"))
-    if vmap is not None:
-        verts0 = vmap.select(F.col("vid").alias("id"))
-    else:
-        verts0 = vertices_from_edges(edges)
+    vmap = materialize(
+        order_preserving_id_map(vertices_from_edges(edges), n_part)
+        .repartition(n_part, "vid")
+    )
+    ue = materialize(
+        undirect(edges)
+        .select("src", "dst")
+        .join(vmap.withColumnRenamed("id", "src"), "src")
+        .select(F.col("vid").alias("src"), "dst")
+        .join(vmap.withColumnRenamed("id", "dst"), "dst")
+        .select("src", F.col("vid").alias("dst"))
+        .repartition(n_part, "src")
+    )
     labels = materialize(
-        verts0.select("id", F.col("id").alias("label"))
+        vmap.select(F.col("vid").alias("id"), F.col("vid").alias("label"))
         .repartition(n_part, "id")
     )
-
-    start_step, metrics = 1, []
-    part_metrics: list[dict] = []
-    n_metrics_appended = 0
-    n_pmetrics_appended = 0
-    if resume and ckpt is not None:
-        latest = ckpt.latest()
-        if latest is not None:
-            st, _, _ = ckpt.load(spark, latest)
-            labels = materialize(st.repartition(n_part, "id"))
-            start_step = latest + 1
+    step = _frontier_step if mode == "frontier" else _rescatter_step
 
     with bsp_loop_confs(spark):
-        converged = False
-        superstep = start_step - 1
-        if mode == "frontier":
-            labels, superstep, converged = _frontier_loop(
-                spark, ue, labels, n_part, start_step, max_iter, run_id,
-                ckpt, checkpoint_interval, partition_metrics,
-                metrics, part_metrics,
-            )
-        else:
-            labels, superstep, converged = _rescatter_loop(
-                spark, ue, labels, n_part, start_step, max_iter, run_id,
-                ckpt, checkpoint_interval, partition_metrics,
-                metrics, part_metrics, vmap, argmax,
-            )
-
-    if vmap is not None:
-        labels = (
-            labels.withColumnRenamed("id", "_v")
-            .join(vmap.withColumnRenamed("vid", "_v"), "_v")
-            .withColumnRenamed("label", "_l")
-            .join(
-                vmap.select(F.col("vid").alias("_l"), F.col("id").alias("label")),
-                "_l",
-            )
-            .select("id", "label")
+        res = run_supersteps(
+            lambda superstep, state, _second, _meta: step(
+                ue, state, n_part, ckpt is not None
+            ),
+            labels,
+            run_id=run_id,
+            max_steps=max_iter,
+            num_partitions=n_part,
+            ckpt=ckpt,
+            checkpoint_interval=checkpoint_interval,
+            resume=resume,
         )
-    return PregelResult(
-        vertices=labels,
-        supersteps=superstep,
-        converged=converged,
-        metrics=metrics,
-        run_id=run_id,
-        partition_metrics=part_metrics,
+
+    res.vertices = (
+        res.vertices.select(F.col("id").alias("_v"), F.col("label").alias("_l"))
+        .join(vmap.withColumnRenamed("vid", "_v"), "_v")
+        .join(
+            vmap.select(F.col("vid").alias("_l"), F.col("id").alias("label")),
+            "_l",
+        )
+        .select("id", "label")
+    )
+    return res
+
+
+def _rescatter_step(ue, labels, n_part, per_partition) -> Superstep:
+    """Classic full-rescatter superstep: 2 O(E) exchanges per round."""
+    msgs = ue.join(labels.withColumnRenamed("id", "src"), "src").select(
+        F.col("dst").alias("id"), F.col("label").alias("cand")
+    )
+    counts = msgs.groupBy("id", "cand").agg(F.count(F.lit(1)).alias("n"))
+    # the deterministic argmax (n desc, cand asc) is max(struct(n,
+    # -cand)) on numeric labels — one aggregation, no row_number window
+    best = (
+        counts.groupBy("id")
+        .agg(F.max(F.struct(F.col("n"), (-F.col("cand")).alias("nc"))).alias("m"))
+        .select("id", (-F.col("m.nc")).alias("new_label"))
+    )
+    plan = labels.join(best, "id", "left_outer").select(
+        "id",
+        F.coalesce("new_label", F.col("label")).alias("label"),
+        (
+            F.col("new_label").isNotNull()
+            & (F.col("new_label") != F.col("label"))
+        ).alias("_changed"),
+    )
+    nxt, stats, parts = materialize_step(
+        plan, per_partition, changed=("sum", F.col("_changed").cast("long"))
+    )
+    return Superstep(
+        nxt.select("id", "label"), stats, stats["changed"] == 0, partitions=parts
     )
 
 
-def _rescatter_loop(
-    spark, ue, labels, n_part, start_step, max_iter, run_id,
-    ckpt, checkpoint_interval, partition_metrics, metrics, part_metrics,
-    vmap, argmax,
-):
-    """Classic full-rescatter superstep: 2 O(E) exchanges per round."""
-    converged = False
-    superstep = start_step - 1
-    n_metrics_appended = len(metrics)
-    n_pmetrics_appended = len(part_metrics)
-    shufd = ShuffleDelta(spark)
-    w = Window.partitionBy("id").orderBy(F.desc("n"), F.asc("cand"))
-    for superstep in range(start_step, max_iter + 1):
-        t0 = time.monotonic()
-        msgs = ue.join(labels.withColumnRenamed("id", "src"), "src").select(
-            F.col("dst").alias("id"), F.col("label").alias("cand")
-        )
-        counts = msgs.groupBy("id", "cand").agg(F.count(F.lit(1)).alias("n"))
-        if vmap is not None and argmax == "struct":
-            # numeric labels: the deterministic argmax (n desc, cand
-            # asc) is max(struct(n, -cand)) — one aggregation instead
-            # of a row_number window (A/B-able; see BASELINE.md)
-            best = (
-                counts.groupBy("id")
-                .agg(
-                    F.max(
-                        F.struct(F.col("n"), (-F.col("cand")).alias("nc"))
-                    ).alias("m")
-                )
-                .select("id", (-F.col("m.nc")).alias("new_label"))
-            )
-        else:
-            best = (
-                counts.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("id", F.col("cand").alias("new_label"))
-            )
-        step_plan = labels.join(best, "id", "left_outer").select(
-            "id",
-            F.coalesce("new_label", F.col("label")).alias("label"),
-            (
-                F.col("new_label").isNotNull()
-                & (F.col("new_label") != F.col("label"))
-            ).alias("_changed"),
-        )
-        # changed-count rides the materialization action via observe()
-        # unless per-partition I5 stats are requested
-        obs = None
-        if not partition_metrics:
-            obs = Observation(f"chg_{run_id}_{superstep}")
-            step_plan = step_plan.observe(
-                obs, F.sum(F.col("_changed").cast("long")).alias("chg")
-            )
-        nxt = materialize(step_plan)
-        if partition_metrics:
-            prows = nxt.groupBy(F.spark_partition_id().alias("pid")).agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col("_changed"), 1).otherwise(0)).alias("changed"),
-            ).collect()
-            changed = sum(r["changed"] or 0 for r in prows)
-            part_metrics.extend(
-                {
-                    "run_id": run_id,
-                    "superstep": superstep,
-                    "partition_id": r["pid"],
-                    "rows": r["rows"],
-                }
-                for r in prows
-            )
-        else:
-            changed = int(obs.get["chg"] or 0)
-        labels = nxt.select("id", "label")
-        metrics.append(
-            {
-                "run_id": run_id,
-                "superstep": superstep,
-                "wall_ms": (time.monotonic() - t0) * 1000,
-                "changed": changed,
-                **shufd.sample(),
-            }
-        )
-        if ckpt is not None and (superstep % checkpoint_interval == 0 or changed == 0):
-            ckpt.save(superstep, labels, meta={"changed": changed})
-            ckpt.append_metrics(spark, metrics[n_metrics_appended:])
-            n_metrics_appended = len(metrics)
-            ckpt.append_partition_metrics(spark, part_metrics[n_pmetrics_appended:])
-            n_pmetrics_appended = len(part_metrics)
-        if changed == 0:
-            converged = True
-            break
-    return labels, superstep, converged
-
-
-def _frontier_loop(
-    spark, ue, labels, n_part, start_step, max_iter, run_id,
-    ckpt, checkpoint_interval, partition_metrics, metrics, part_metrics,
-):
+def _frontier_step(ue, state, n_part, per_partition) -> Superstep:
     """Decremental-count superstep (module docstring): state is
     ``(id, label, cmap)`` hash-partitioned by ``id``; per round the
-    argmax is row-local and only the changed frontier shuffles.
+    argmax is row-local and only the changed frontier shuffles. The
+    first superstep of a run seeds ``cmap`` from ``(id, label)``; a
+    checkpoint carries it, so a resumed run does not reseed.
 
     Exchange audit (everything else partition-aligned, verified via
     ``.explain``): one O(E) exchange to seed ``cmap``; then per round
@@ -276,145 +184,99 @@ def _frontier_loop(
     ``groupBy(id, cand)`` and the delta merge both ride
     ``HashPartitioning(id)`` (subset-of-grouping-keys rule), and the
     left-outer merge join preserves the streamed side's partitioning,
-    which ``localCheckpoint`` carries into the next round."""
-    converged = False
-    superstep = start_step - 1
-    n_metrics_appended = len(metrics)
-    n_pmetrics_appended = len(part_metrics)
-    shufd = ShuffleDelta(spark)
-
-    # Seed cmap: one full scatter — the same O(E) exchange a single
-    # rescatter superstep pays, paid once.
-    cmap0 = (
-        ue.join(
-            labels.withColumnRenamed("id", "src")
-            .withColumnRenamed("label", "cand"),
-            "src",
+    which ``localCheckpoint`` carries into the next round. The merge
+    and the changed count are one action: a round where nothing
+    changed merges an empty delta map and leaves the state as it was."""
+    if "cmap" not in state.columns:
+        # Seed cmap: one full scatter — the same O(E) exchange a single
+        # rescatter superstep pays, paid once.
+        cmap0 = (
+            ue.join(
+                state.withColumnRenamed("id", "src")
+                .withColumnRenamed("label", "cand"),
+                "src",
+            )
+            .select(F.col("dst").alias("id"), "cand")
+            .repartition(n_part, "id")
+            .groupBy("id", "cand")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .groupBy("id")
+            .agg(F.map_from_entries(F.collect_list(F.struct("cand", "n"))).alias("cmap"))
         )
-        .select(F.col("dst").alias("id"), "cand")
-        .repartition(n_part, "id")
+        state = materialize(
+            state.join(cmap0, "id", "left_outer").select("id", "label", "cmap")
+        )
+    # Row-local deterministic argmax over the neighbor-label counts:
+    # max(struct(n, -cand)) == (count desc, label asc). Empty/NULL
+    # cmap (isolated vertex) keeps its label.
+    m = F.array_max(
+        F.transform(
+            F.map_entries("cmap"),
+            lambda e: F.struct(e["value"].alias("n"), (-e["key"]).alias("nc")),
+        )
+    )
+    cur = state.select(
+        "id",
+        F.col("label").alias("_old"),
+        F.coalesce(-m["nc"], F.col("label")).alias("label"),
+        "cmap",
+    )
+    # Only the frontier scatters: retract old label, announce new, over
+    # each changed vertex's edges.
+    delta = cur.filter(F.col("label") != F.col("_old")).select(
+        F.col("id").alias("src"), "_old", F.col("label").alias("_new")
+    )
+    dmsgs = (
+        ue.join(delta.hint("shuffle_hash"), "src")
+        .select(
+            F.col("dst").alias("id"),
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("_old").alias("cand"),
+                        F.lit(-1).cast("long").alias("dn"),
+                    ),
+                    F.struct(
+                        F.col("_new").alias("cand"),
+                        F.lit(1).cast("long").alias("dn"),
+                    ),
+                )
+            ).alias("e"),
+        )
+        .select("id", F.col("e.cand").alias("cand"), F.col("e.dn").alias("dn"))
+    )
+    dmap = (
+        dmsgs.repartition(n_part, "id")
         .groupBy("id", "cand")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.sum("dn").alias("dn"))
+        .filter(F.col("dn") != 0)
         .groupBy("id")
-        .agg(F.map_from_entries(F.collect_list(F.struct("cand", "n"))).alias("cmap"))
+        .agg(F.map_from_entries(F.collect_list(F.struct("cand", "dn"))).alias("dmap"))
     )
-    state = materialize(
-        labels.join(cmap0, "id", "left_outer").select("id", "label", "cmap")
+    plan = cur.join(dmap, "id", "left_outer").select(
+        "id",
+        "label",
+        F.when(F.col("dmap").isNull(), F.col("cmap"))
+        .otherwise(
+            F.map_filter(
+                F.map_zip_with(
+                    "cmap",
+                    "dmap",
+                    lambda k, v1, v2: F.coalesce(v1, F.lit(0))
+                    + F.coalesce(v2, F.lit(0)),
+                ),
+                lambda k, v: v > F.lit(0),
+            )
+        )
+        .alias("cmap"),
+        (F.col("label") != F.col("_old")).alias("_changed"),
     )
-
-    for superstep in range(start_step, max_iter + 1):
-        t0 = time.monotonic()
-        # Row-local deterministic argmax over the neighbor-label counts:
-        # max(struct(n, -cand)) == (count desc, label asc). Empty/NULL
-        # cmap (isolated vertex) keeps its label.
-        m = F.array_max(
-            F.transform(
-                F.map_entries("cmap"),
-                lambda e: F.struct(
-                    e["value"].alias("n"), (-e["key"]).alias("nc")
-                ),
-            )
-        )
-        cur = state.select(
-            "id",
-            F.col("label").alias("_old"),
-            F.coalesce(-m["nc"], F.col("label")).alias("label"),
-            "cmap",
-        )
-        if partition_metrics:
-            prows = cur.groupBy(F.spark_partition_id().alias("pid")).agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum((F.col("label") != F.col("_old")).cast("long")).alias(
-                    "changed"
-                ),
-            ).collect()
-            changed = sum(r["changed"] or 0 for r in prows)
-            part_metrics.extend(
-                {
-                    "run_id": run_id,
-                    "superstep": superstep,
-                    "partition_id": r["pid"],
-                    "rows": r["rows"],
-                }
-                for r in prows
-            )
-        else:
-            changed = cur.filter(F.col("label") != F.col("_old")).count()
-
-        if changed > 0:
-            # Only the frontier scatters: retract old label, announce
-            # new, over each changed vertex's edges.
-            delta = cur.filter(F.col("label") != F.col("_old")).select(
-                F.col("id").alias("src"), "_old", F.col("label").alias("_new")
-            )
-            dmsgs = (
-                ue.join(delta.hint("shuffle_hash"), "src")
-                .select(
-                    F.col("dst").alias("id"),
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.col("_old").alias("cand"),
-                                F.lit(-1).cast("long").alias("dn"),
-                            ),
-                            F.struct(
-                                F.col("_new").alias("cand"),
-                                F.lit(1).cast("long").alias("dn"),
-                            ),
-                        )
-                    ).alias("e"),
-                )
-                .select("id", F.col("e.cand").alias("cand"), F.col("e.dn").alias("dn"))
-            )
-            dmap = (
-                dmsgs.repartition(n_part, "id")
-                .groupBy("id", "cand")
-                .agg(F.sum("dn").alias("dn"))
-                .filter(F.col("dn") != 0)
-                .groupBy("id")
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("cand", "dn"))
-                    ).alias("dmap")
-                )
-            )
-            state = materialize(
-                cur.join(dmap, "id", "left_outer").select(
-                    "id",
-                    "label",
-                    F.when(F.col("dmap").isNull(), F.col("cmap"))
-                    .otherwise(
-                        F.map_filter(
-                            F.map_zip_with(
-                                "cmap",
-                                "dmap",
-                                lambda k, v1, v2: F.coalesce(v1, F.lit(0))
-                                + F.coalesce(v2, F.lit(0)),
-                            ),
-                            lambda k, v: v > F.lit(0),
-                        )
-                    )
-                    .alias("cmap"),
-                )
-            )
-        # changed == 0 ⇒ the old state's labels are already current
-        labels = state.select("id", "label")
-        metrics.append(
-            {
-                "run_id": run_id,
-                "superstep": superstep,
-                "wall_ms": (time.monotonic() - t0) * 1000,
-                "changed": changed,
-                **shufd.sample(),
-            }
-        )
-        if ckpt is not None and (superstep % checkpoint_interval == 0 or changed == 0):
-            ckpt.save(superstep, labels, meta={"changed": changed})
-            ckpt.append_metrics(spark, metrics[n_metrics_appended:])
-            n_metrics_appended = len(metrics)
-            ckpt.append_partition_metrics(spark, part_metrics[n_pmetrics_appended:])
-            n_pmetrics_appended = len(part_metrics)
-        if changed == 0:
-            converged = True
-            break
-    return labels, superstep, converged
+    nxt, stats, parts = materialize_step(
+        plan, per_partition, changed=("sum", F.col("_changed").cast("long"))
+    )
+    return Superstep(
+        nxt.select("id", "label", "cmap"),
+        stats,
+        stats["changed"] == 0,
+        partitions=parts,
+    )

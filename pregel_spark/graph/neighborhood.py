@@ -48,7 +48,6 @@ from .build import vertices_from_edges
 from .engine import (
     PregelResult,
     ShuffleDelta,
-    StepMaterializer,
     bsp_loop_confs,
     materialize,
 )
@@ -67,7 +66,6 @@ def neighborhood_function(
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    partition_metrics: bool | None = None,
     direction: str = "out",
     harmonic: bool = False,
 ) -> PregelResult:
@@ -87,8 +85,8 @@ def neighborhood_function(
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
-    if partition_metrics is None:
-        partition_metrics = ckpt is not None  # see pagerank.py rationale
+    # per-partition I5 rows ride checkpointed runs (engine.materialize_step)
+    partition_metrics = ckpt is not None
     dedup = edges.select("src", "dst")
     if direction == "in":
         dedup = dedup.select(
@@ -147,8 +145,6 @@ def neighborhood_function(
         state = state.withColumn("h", F.lit(0.0))
     state_cols = ["id", "ball"] + (["h"] if harmonic else [])
     state = materialize(state.repartition(n_part, "id"))
-    stepm = StepMaterializer()
-    stepm.advance(state, superstep=1, persisted=False)
     n_pairs = state.agg(F.sum(size_col).alias("s")).collect()[0]["s"] or 0
 
     start_step, metrics = 1, []
@@ -197,14 +193,13 @@ def neighborhood_function(
                     )
                     / F.lit(float(superstep)),
                 )
-            nxt = stepm.step(
+            nxt = materialize(
                 upd.select(
                     "id",
                     "nball",
                     *(["h"] if harmonic else []),
                     changed_expr.alias("_ch"),
-                ).withColumnRenamed("nball", "ball"),
-                superstep,
+                ).withColumnRenamed("nball", "ball")
             )
             # ONE action serves N(t) + quiescence + (when enabled) the
             # per-partition I5 rows, same pattern as pagerank.py
@@ -231,7 +226,6 @@ def neighborhood_function(
                     F.sum(F.col("_ch").cast("long")).alias("ch"),
                 ).collect()[0]
                 n_pairs, changed = row["s"] or 0, row["ch"] or 0
-            stepm.advance(nxt, superstep)
             state = nxt.select(*state_cols)
             metrics.append(
                 {

@@ -17,24 +17,27 @@ reference mapping):
   partial aggregation is the map-side combine, which already collapses
   hub skew for algebraic sums (see skew.py for why salting is not
   needed here, and ``use_salted`` to force the two-phase path);
-- aggregator A3 (dangling mass) and the convergence test share ONE
-  driver action per superstep: ``agg(max(delta), sum(rank WHERE
-  dangling))`` — the reference needs a full barrier round-trip for the
-  same (``pregel/aggregator.lua``, ``pregel/master.lua:64-75``); that
-  action also fills the new ranks' cache, so steady-state supersteps
-  are a single Spark job;
-- loop-carried ranks are ``localCheckpoint``-ed every superstep:
-  the new state references the old state twice (rank update + delta),
-  so an uncut plan doubles per iteration — see ``StepMaterializer``
-  for the measurement; AQE is disabled inside the loop
-  (``bsp_loop_confs``, ~2x per-superstep overhead for zero benefit on
-  fixed-shape jobs); parquet snapshots via ``checkpoint_dir`` make
-  runs resumable (``pregel/master.lua:101-103``).
+- aggregator A3 (dangling mass) and the convergence test ride the
+  superstep's one materialization (``engine.materialize_step``):
+  ``max(delta)`` and ``sum(rank WHERE dangling)`` are ``observe()``
+  metrics of the ``localCheckpoint`` that cuts the new ranks' lineage,
+  so a superstep fires no separate aggregation job — the reference
+  needs a full barrier round-trip for the same
+  (``pregel/aggregator.lua``, ``pregel/master.lua:64-75``).
+  Checkpointed runs instead fold both from the per-partition rows
+  (one extra tiny job, the I5 stats);
+- loop-carried ranks are ``localCheckpoint``-ed every superstep (the
+  new state references the old state twice, rank update + delta, so an
+  uncut plan doubles per iteration — see ``engine.materialize``); AQE
+  is disabled inside the loop (``bsp_loop_confs``, ~2x per-superstep
+  overhead for zero benefit on fixed-shape jobs);
+  ``engine.run_supersteps`` owns the loop: metrics rows, parquet
+  snapshots via ``checkpoint_dir`` and resume
+  (``pregel/master.lua:101-103``).
 """
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -43,10 +46,11 @@ from ..tableio import CheckpointManager
 from .build import vertices_from_edges
 from .engine import (
     PregelResult,
-    ShuffleDelta,
-    StepMaterializer,
+    Superstep,
     bsp_loop_confs,
     materialize,
+    materialize_step,
+    run_supersteps,
 )
 from .skew import salted_sum
 
@@ -154,12 +158,10 @@ def pagerank(
     checkpoint_interval: int = 10,
     resume: bool = False,
     use_salted: bool = False,
-    lineage_cut_interval: int = 1,
     numeric_ids: bool = True,
     pre_deduped: bool = False,
     weighted: bool = False,
     sources: list[str] | None = None,
-    partition_metrics: bool | None = None,
     initial_ranks: DataFrame | None = None,
     prepared: PreparedGraph | None = None,
 ) -> PregelResult:
@@ -204,12 +206,6 @@ def pagerank(
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
-    if partition_metrics is None:
-        # per-partition I5 stats ride the convergence action whenever the
-        # run is durable (checkpointed) — that is where skew diagnosis
-        # lives; bare benchmark loops keep the minimal flat aggregation
-        # (the grouped variant costs ~0.2-0.4s/superstep at 32 cores)
-        partition_metrics = ckpt is not None
 
     # static structures: out-degree-normalized link shares, dangling
     # flag — built by prepare_graph (multi-edge collapse, numeric-id
@@ -240,7 +236,6 @@ def pagerank(
             metrics=[],
             run_id=run_id,
         )
-    stepm = StepMaterializer(cut_interval=lineage_cut_interval)
     src_df = None
     if sources is not None:
         src_df = spark.createDataFrame([(s,) for s in sources], "id string")
@@ -296,149 +291,87 @@ def pagerank(
         F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm")
     ).collect()[0]
     dm = row["dm"] or 0.0
-    stepm.advance(ranks, superstep=1, persisted=True)  # initial state is persisted
+    start = ranks  # persisted; freed once the first superstep replaced it
+    keep = ["id", "rank", "is_dangling"] + (["is_source"] if src_df is not None else [])
 
-    start_step, metrics = 1, []
-    part_metrics: list[dict] = []
-    n_metrics_appended = 0
-    n_pmetrics_appended = 0
-    if resume and ckpt is not None:
-        latest = ckpt.latest()
-        if latest is not None:
-            st, _, meta = ckpt.load(spark, latest)
-            ranks = materialize(st.repartition(n_part, "id"))
-            dm = meta["dm"]
-            n = meta["n"]
-            start_step = latest + 1
+    def step(superstep, ranks, _, meta):
+        dm = meta["dm"]
+        contribs = links.join(ranks.withColumnRenamed("id", "src"), "src").select(
+            "dst", (F.col("rank") * F.col("share")).alias("contrib")
+        )
+        if use_salted:
+            sums = salted_sum(contribs, "dst", "contrib").withColumnRenamed(
+                "sum_contrib", "s"
+            )
+        else:
+            sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
+        if src_df is not None:
+            restart = F.when(
+                F.col("is_source"),
+                F.lit((1.0 - d) / n_restart) + F.lit(d * dm / n_restart),
+            ).otherwise(F.lit(0.0))
+            new_rank = restart + F.lit(d) * F.coalesce(F.col("s"), F.lit(0.0))
+        else:
+            new_rank = (
+                F.lit((1.0 - d) / n)
+                + F.lit(d) * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm / n))
+            )
+        plan = (
+            ranks.join(sums.withColumnRenamed("dst", "id"), "id", "left_outer")
+            .select(
+                "id",
+                new_rank.alias("new_rank"),
+                F.abs(new_rank - F.col("rank")).alias("delta"),
+                *keep[2:],
+            )
+            .withColumnRenamed("new_rank", "rank")
+        )
+        # convergence and the dangling-mass aggregator for the next
+        # superstep ride the materialization (engine.materialize_step)
+        nxt, stats, parts = materialize_step(
+            plan,
+            ckpt is not None,
+            delta_max=("max", F.col("delta")),
+            dm=("sum", F.when(F.col("is_dangling"), F.col("rank"))),
+        )
+        if start.is_cached:
+            start.unpersist()
+        return Superstep(
+            nxt.select(*keep),
+            {"delta_max": stats["delta_max"]},
+            tol > 0 and stats["delta_max"] < tol,
+            meta={"dm": stats["dm"]},
+            partitions=parts,
+        )
 
-    shufd = ShuffleDelta(spark)
     with bsp_loop_confs(spark):
-        converged = False
-        superstep = start_step - 1
-        for superstep in range(start_step, max_iter + 1):
-            t0 = time.monotonic()
-            contribs = links.join(ranks.withColumnRenamed("id", "src"), "src").select(
-                "dst", (F.col("rank") * F.col("share")).alias("contrib")
-            )
-            if use_salted:
-                sums = salted_sum(contribs, "dst", "contrib").withColumnRenamed(
-                    "sum_contrib", "s"
-                )
-            else:
-                sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("s"))
-            if src_df is not None:
-                restart = F.when(
-                    F.col("is_source"),
-                    F.lit((1.0 - d) / n_restart) + F.lit(d * dm / n_restart),
-                ).otherwise(F.lit(0.0))
-                new_rank = restart + F.lit(d) * F.coalesce(F.col("s"), F.lit(0.0))
-            else:
-                new_rank = (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * (F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(dm / n))
-                )
-            nxt = stepm.step(
-                ranks.join(sums.withColumnRenamed("dst", "id"), "id", "left_outer")
-                .select(
-                    "id",
-                    new_rank.alias("new_rank"),
-                    F.abs(new_rank - F.col("rank")).alias("delta"),
-                    "is_dangling",
-                    *(["is_source"] if src_df is not None else []),
-                )
-                .withColumnRenamed("new_rank", "rank"),
-                superstep,
-            )
-            # ONE action serves convergence + dangling aggregator + (when
-            # partition_metrics) the per-partition I5 stats: grouping the
-            # same aggregation by spark_partition_id yields one tiny row
-            # per physical state partition (the reference's per-worker
-            # superstep stats, pregel/master.lua:60-63) and the driver
-            # folds the global values from them. ``partition_metrics=
-            # False`` keeps the flat two-stage agg for minimum fixed
-            # per-superstep cost.
-            if partition_metrics:
-                prows = nxt.groupBy(F.spark_partition_id().alias("pid")).agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.max("delta").alias("max_delta"),
-                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm"),
-                ).collect()
-                max_delta = max(
-                    (r["max_delta"] for r in prows if r["max_delta"] is not None),
-                    default=0.0,
-                )
-                dm = sum(r["dm"] or 0.0 for r in prows)
-                part_metrics.extend(
-                    {
-                        "run_id": run_id,
-                        "superstep": superstep,
-                        "partition_id": r["pid"],
-                        "rows": r["rows"],
-                    }
-                    for r in prows
-                )
-            else:
-                row = nxt.agg(
-                    F.max("delta").alias("max_delta"),
-                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm"),
-                ).collect()[0]
-                max_delta = row["max_delta"] or 0.0
-                dm = row["dm"] or 0.0
-            stepm.advance(nxt, superstep)
-            keep = ["id", "rank", "is_dangling"] + (
-                ["is_source"] if src_df is not None else []
-            )
-            ranks = nxt.select(*keep)
-            metrics.append(
-                {
-                    "run_id": run_id,
-                    "superstep": superstep,
-                    "wall_ms": (time.monotonic() - t0) * 1000,
-                    "delta_max": max_delta,
-                    **shufd.sample(),
-                }
-            )
-            done = tol > 0 and max_delta < tol
-            if ckpt is not None and (superstep % checkpoint_interval == 0 or done):
-                ckpt.save(
-                    superstep,
-                    ranks,
-                    meta={
-                        "dm": dm,
-                        "n": n,
-                        "max_delta": max_delta,
-                        "numeric_ids": vmap is not None,
-                    },
-                )
-                ckpt.append_metrics(spark, metrics[n_metrics_appended:])
-                n_metrics_appended = len(metrics)
-                ckpt.append_partition_metrics(spark, part_metrics[n_pmetrics_appended:])
-                n_pmetrics_appended = len(part_metrics)
-            if done:
-                converged = True
-                break
+        res = run_supersteps(
+            step,
+            ranks,
+            meta={"dm": dm},
+            run_id=run_id,
+            max_steps=max_iter,
+            num_partitions=n_part,
+            ckpt=ckpt,
+            checkpoint_interval=checkpoint_interval,
+            resume=resume,
+        )
 
-    # final state is materialized (cached/checkpointed); the static link
-    # table is no longer needed by THIS run — free executor storage
-    # unless the caller shared it via ``prepared=`` (they release())
-    ranks = materialize(ranks.select("id", "rank", "is_dangling"))
+    # the static link table is no longer needed by THIS run — free
+    # executor storage unless the caller shared it via ``prepared=``
+    # (they release())
+    final = materialize(res.vertices.select("id", "rank", "is_dangling"))
     if owns_links:
         links.unpersist()
-    out = ranks.select("id", "rank")
+    out = final.select("id", "rank")
     if vmap is not None:
         out = (
             out.withColumnRenamed("id", "vid")
             .join(vmap, "vid")
             .select("id", "rank")
         )
-    return PregelResult(
-        vertices=out,
-        supersteps=superstep,
-        converged=converged,
-        metrics=metrics,
-        run_id=run_id,
-        partition_metrics=part_metrics,
-    )
+    res.vertices = out
+    return res
 
 
 def spam_mass(

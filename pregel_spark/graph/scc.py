@@ -36,7 +36,7 @@ Scale notes: no collect() on the data plane; all joins are key-
 partitioned with the static side repartitioned once per round; the
 per-superstep exchanges are O(frontier edges), and the remaining-
 subgraph tables shrink monotonically. ``materialize`` cuts lineage at
-every loop-carried step (see engine.StepMaterializer for why).
+every loop-carried step (see engine.materialize for why).
 """
 
 from __future__ import annotations

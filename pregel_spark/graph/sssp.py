@@ -52,7 +52,6 @@ from .build import order_preserving_id_map, vertices_from_edges
 from .engine import (
     PregelResult,
     ShuffleDelta,
-    StepMaterializer,
     bsp_loop_confs,
     materialize,
 )
@@ -104,8 +103,6 @@ def _delta_relax(
     deltas: list[DataFrame],
     frontier: DataFrame,
     links_t: DataFrame,
-    stepm: StepMaterializer,
-    superstep: int,
     obs: Observation | None = None,
 ) -> DataFrame:
     """ONE Bellman-Ford superstep over DELTA-REPRESENTED state, shared
@@ -165,7 +162,7 @@ def _delta_relax(
     plan = j.filter(improved).select("id", F.col("_md").alias("dist"))
     if obs is not None:
         plan = plan.observe(obs, F.count(F.lit(1)).alias("nf"))
-    return stepm.step(plan, superstep)
+    return materialize(plan)
 
 
 def _compact(base: DataFrame, deltas: list[DataFrame]) -> DataFrame:
@@ -195,7 +192,6 @@ def shortest_paths(
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 10,
     resume: bool = False,
-    partition_metrics: bool | None = None,
     numeric_ids: bool = True,
 ) -> PregelResult:
     """Weighted shortest distances from a source set. Returns
@@ -226,8 +222,8 @@ def shortest_paths(
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
-    if partition_metrics is None:
-        partition_metrics = ckpt is not None  # see pagerank.py rationale
+    # per-partition I5 rows ride checkpointed runs (engine.materialize_step)
+    partition_metrics = ckpt is not None
 
     e = _symmetrize(
         edges.select("src", "dst", F.col("weight").cast("double").alias("weight")),
@@ -289,8 +285,6 @@ def shortest_paths(
     )
     delta = base
     deltas: list[DataFrame] = []
-    stepm = StepMaterializer()
-    stepm.advance(base, superstep=1, persisted=False)
     n_frontier = base.count()
 
     start_step, metrics = 1, []
@@ -319,7 +313,6 @@ def shortest_paths(
                 st.filter("changed").select("id", "dist").repartition(n_part, "id")
             )
             deltas = []
-            stepm.advance(base, superstep=latest, persisted=False)
             n_frontier = meta["frontier"]
             start_step = latest + 1
 
@@ -363,7 +356,7 @@ def shortest_paths(
                 else Observation(f"nf_{run_id}_{superstep}")
             )
             nxt = _delta_relax(
-                base, deltas, frontier, links_t, stepm, superstep, obs=obs
+                base, deltas, frontier, links_t, obs=obs
             )
             if partition_metrics:
                 prows = nxt.groupBy(F.spark_partition_id().alias("pid")).agg(
@@ -381,7 +374,6 @@ def shortest_paths(
                 )
             else:
                 n_frontier = int(obs.get["nf"] or 0)
-            stepm.advance(nxt, superstep)
             delta = nxt
             deltas.append(delta)
             checkpoint_due = ckpt is not None and (
@@ -573,8 +565,6 @@ def shortest_paths_indexed(
     )
     delta = base
     deltas: list[DataFrame] = []
-    stepm = StepMaterializer()
-    stepm.advance(base, superstep=1, persisted=False)
     n_frontier = base.count()
 
     metrics: list[dict] = []
@@ -644,10 +634,9 @@ def shortest_paths_indexed(
                         links_t = cached_links.filter(F.col("_b").isin(blist2))
             obs = Observation(f"nf_{run_id}_{superstep}")
             nxt = _delta_relax(
-                base, deltas, frontier, links_t, stepm, superstep, obs=obs
+                base, deltas, frontier, links_t, obs=obs
             )
             n_frontier = int(obs.get["nf"] or 0)
-            stepm.advance(nxt, superstep)
             delta = nxt
             deltas.append(delta)
             compacted = False

@@ -49,7 +49,6 @@ from .build import vertices_from_edges
 from .engine import (
     PregelResult,
     ShuffleDelta,
-    StepMaterializer,
     bsp_loop_confs,
     materialize,
 )
@@ -104,8 +103,6 @@ def earliest_arrival(
             F.lit(True).alias("changed"),
         ).repartition(n_part, "id")
     )
-    stepm = StepMaterializer()
-    stepm.advance(state, superstep=1, persisted=False)
     n_frontier = state.count()
 
     feasible = (
@@ -178,7 +175,7 @@ def earliest_arrival(
             # counter) rides the SAME eager-checkpoint action via
             # observe() — no separate per-superstep count job
             obs = Observation(f"nf_{run_id}_{superstep}")
-            nxt = stepm.step(
+            nxt = materialize(
                 merged.select(
                     "id",
                     F.when(improved, F.col("_ma"))
@@ -187,11 +184,9 @@ def earliest_arrival(
                     improved.alias("changed"),
                 ).observe(
                     obs, F.sum(F.col("changed").cast("long")).alias("nf")
-                ),
-                superstep,
+                )
             )
             n_frontier = int(obs.get["nf"] or 0)
-            stepm.advance(nxt, superstep)
             state = nxt
             metrics.append(
                 {

@@ -16,7 +16,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# defaults come from the host: every core, and physical RAM (rounded up
+# to whole GiB) as the driver heap cap. Local mode runs the executors
+# inside the driver JVM, which commits heap lazily, so the cap is an
+# upper bound, not a reservation; a session holding many cached
+# superstep tables needs the room. SPARK_GRAFT_CPUS /
+# SPARK_GRAFT_DRIVER_MEM override them.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+    f"{-(-os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**30)}g"
+)
 
 
 def get_spark(
@@ -50,7 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",

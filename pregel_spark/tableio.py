@@ -4,9 +4,10 @@ The north rule targets Iceberg tables; this sandbox has no Iceberg
 runtime jar, so ``TableIO`` abstracts the two behind one seam (SURVEY.md
 §7.3): a *table* is a directory of parquet plus a ``_manifest.json``
 recording schema, row count, and arbitrary metadata — enough for the
-engine's checkpoint/resume contract (atomic-enough commits: data written
-first, manifest last; a checkpoint without a manifest is incomplete and
-ignored on resume, mirroring Iceberg's snapshot-commit semantics).
+engine's checkpoint/resume contract (data written first, then the
+manifest committed atomically by rename; a checkpoint without a manifest
+is incomplete and ignored on resume, mirroring Iceberg's snapshot-commit
+semantics).
 
 Checkpoint layout (replaces Tarantool ``box.snapshot()``,
 ``pregel/master.lua:101-103`` / ``pregel/worker.lua:61-63`` — but
@@ -67,9 +68,25 @@ def write_table(
         "meta": meta or {},
     }
     if fmt == "parquet":
-        with open(os.path.join(path, MANIFEST), "w") as f:
-            json.dump(man, f)
+        _write_manifest(path, man)
     return man
+
+
+def _write_manifest(dir_path: str, obj: dict) -> None:
+    """Commit ``obj`` as ``dir_path/_manifest.json`` atomically: write a
+    temp file in the same directory, then ``os.replace`` it into place.
+    A crash mid-write leaves no manifest (the table or step reads as
+    incomplete) rather than a torn one; the leading underscore keeps
+    the temp file out of Spark's parquet listing."""
+    final = os.path.join(dir_path, MANIFEST)
+    tmp = final + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, final)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
@@ -116,8 +133,9 @@ class CheckpointManager:
         if msgs is not None:
             write_table(msgs, os.path.join(d, "msgs"), meta=meta)
         # step-level manifest LAST -> commit point
-        with open(os.path.join(d, MANIFEST), "w") as f:
-            json.dump({"superstep": superstep, "meta": meta or {}, "has_msgs": msgs is not None}, f)
+        _write_manifest(
+            d, {"superstep": superstep, "meta": meta or {}, "has_msgs": msgs is not None}
+        )
 
     def completed_supersteps(self) -> list[int]:
         out = []

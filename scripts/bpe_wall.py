@@ -37,7 +37,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 
 from pregel_spark.pipeline.bpe import bpe_learn, word_census
-from pregel_spark.session import get_spark
+from pregel_spark.session import DEFAULT_CPUS, get_spark
 
 
 def main():
@@ -46,7 +46,7 @@ def main():
     words_per_doc, vocab = 64, 50_000
     spark = get_spark(
         "bpe-wall",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{DEFAULT_CPUS}]",
         shuffle_partitions=32,
     )
     spark.sparkContext.setLogLevel("ERROR")
