@@ -490,7 +490,11 @@ def q_cc_incremental(spark, sf_dir):
 
 def q_modularity(spark, sf_dir):
     """Newman modularity of the 2-round LPA partition on the circulant
-    fixture; per-community sufficient statistics + contribution."""
+    fixture; per-community sufficient statistics and the integer
+    numerator of the contribution,
+    ``q_num = 4*m*intra_edges - deg_sum*deg_sum`` (``contrib = q_num /
+    (4*m*m)``): every hashed value is an exact integer, so no float
+    rendering reaches the contract surface."""
     from pregel_spark.graph import label_propagation, modularity
 
     edges = _tri_edges(spark, sf_dir)
@@ -499,13 +503,11 @@ def q_modularity(spark, sf_dir):
         "label",
         "intra_edges",
         "deg_sum",
-        # Emit contrib as DECIMAL(18,6), not DOUBLE: the rounded double
-        # is byte-exact across engines locally, but the driver's value
-        # hash stayed red two rounds running (a float-rendering /
-        # DuckDB-build artifact at the contract boundary). A decimal has
-        # one canonical representation — no -0.0, no float formatting —
-        # so the hashed surface carries no IEEE ambiguity at all.
-        F.round("contrib", 6).cast("decimal(18,6)").alias("contrib"),
+        "m",
+        (
+            F.lit(4) * F.col("m") * F.col("intra_edges")
+            - F.col("deg_sum") * F.col("deg_sum")
+        ).cast("bigint").alias("q_num"),
     )
 
 
@@ -1684,7 +1686,9 @@ def _pagerank_unrolled_sql(k: int, edges_sql: str, round_final: bool = True) -> 
     has no loop construct, so each superstep is one (dangling-mass,
     scatter-sum, update) CTE triple. ``round_final=False`` emits
     unrounded ranks for composition (rank_shift joins two chains and
-    rounds AFTER the subtraction, like the Spark side)."""
+    rounds AFTER the subtraction, like the Spark side). Each ``r{i}`` is
+    read twice (dangling mass and scatter), so it is ``MATERIALIZED``:
+    inlined, the chain would grow as 2^k."""
     steps = []
     for i in range(k):
         steps.append(f"""
@@ -1693,7 +1697,7 @@ d{i} AS (SELECT COALESCE(sum(rank), 0.0) AS dm FROM r{i}
 s{i + 1} AS (SELECT e.dst AS id, sum(r{i}.rank / od.c) AS s
         FROM e JOIN od ON e.src = od.src JOIN r{i} ON r{i}.id = e.src
         GROUP BY e.dst),
-r{i + 1} AS (SELECT v.id,
+r{i + 1} AS MATERIALIZED (SELECT v.id,
         (1 - 0.85) / nn + 0.85 * (COALESCE(s{i + 1}.s, 0.0) + d{i}.dm / nn) AS rank
         FROM v CROSS JOIN n CROSS JOIN d{i}
         LEFT JOIN s{i + 1} ON s{i + 1}.id = v.id)""")
@@ -1703,7 +1707,7 @@ e AS (SELECT DISTINCT src, dst FROM e0),
 v AS (SELECT src AS id FROM e UNION SELECT dst AS id FROM e),
 n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM v),
 od AS (SELECT src, CAST(count(*) AS DOUBLE) AS c FROM e GROUP BY src),
-r0 AS (SELECT id, 1.0 / nn AS rank FROM v CROSS JOIN n),{",".join(steps)}
+r0 AS MATERIALIZED (SELECT id, 1.0 / nn AS rank FROM v CROSS JOIN n),{",".join(steps)}
 SELECT id, {"round(rank, 6)" if round_final else "rank"} AS rank FROM r{k}
 """
 def _anf_unrolled_sql(
@@ -1781,7 +1785,7 @@ d{i} AS (SELECT COALESCE(sum(rank), 0.0) AS dm FROM r{i}
 s{i + 1} AS (SELECT e.dst AS id, sum(r{i}.rank / od.c) AS s
         FROM e JOIN od ON e.src = od.src JOIN r{i} ON r{i}.id = e.src
         GROUP BY e.dst),
-r{i + 1} AS (SELECT v.id,
+r{i + 1} AS MATERIALIZED (SELECT v.id,
         CASE WHEN sv{i}.id IS NOT NULL
              THEN (1 - 0.85) / ns + 0.85 * d{i}.dm / ns
              ELSE 0.0 END
@@ -1817,7 +1821,7 @@ d{i} AS (SELECT COALESCE(sum(rank), 0.0) AS dm FROM r{i}
 s{i + 1} AS (SELECT e.dst AS id, sum(r{i}.rank / od.c) AS s
         FROM e JOIN od ON e.src = od.src JOIN r{i} ON r{i}.id = e.src
         GROUP BY e.dst),
-r{i + 1} AS (SELECT v.id,
+r{i + 1} AS MATERIALIZED (SELECT v.id,
         (1 - 0.85) / nn + 0.85 * (COALESCE(s{i + 1}.s, 0.0) + d{i}.dm / nn) AS rank
         FROM v CROSS JOIN n CROSS JOIN d{i}
         LEFT JOIN s{i + 1} ON s{i + 1}.id = v.id),
@@ -1826,7 +1830,7 @@ pd{i} AS (SELECT COALESCE(sum(rank), 0.0) AS dm FROM p{i}
 ps{i + 1} AS (SELECT e.dst AS id, sum(p{i}.rank / od.c) AS s
         FROM e JOIN od ON e.src = od.src JOIN p{i} ON p{i}.id = e.src
         GROUP BY e.dst),
-p{i + 1} AS (SELECT v.id,
+p{i + 1} AS MATERIALIZED (SELECT v.id,
         CASE WHEN sv{i}.id IS NOT NULL
              THEN (1 - 0.85) / ns + 0.85 * pd{i}.dm / ns
              ELSE 0.0 END
@@ -1864,7 +1868,7 @@ d{i} AS (SELECT COALESCE(sum(rank), 0.0) AS dm FROM r{i}
 s{i + 1} AS (SELECT ws.dst AS id, sum(r{i}.rank * ws.share) AS s
         FROM ws JOIN r{i} ON r{i}.id = ws.src
         GROUP BY ws.dst),
-r{i + 1} AS (SELECT v.id,
+r{i + 1} AS MATERIALIZED (SELECT v.id,
         (1 - 0.85) / nn + 0.85 * (COALESCE(s{i + 1}.s, 0.0) + d{i}.dm / nn) AS rank
         FROM v CROSS JOIN n CROSS JOIN d{i}
         LEFT JOIN s{i + 1} ON s{i + 1}.id = v.id)""")
@@ -1876,7 +1880,7 @@ n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM v),
 od AS (SELECT src, sum(w) AS wsum FROM e GROUP BY src),
 ws AS (SELECT e.src, e.dst, e.w / od.wsum AS share
        FROM e JOIN od ON od.src = e.src),
-r0 AS (SELECT id, 1.0 / nn AS rank FROM v CROSS JOIN n),{",".join(steps)}
+r0 AS MATERIALIZED (SELECT id, 1.0 / nn AS rank FROM v CROSS JOIN n),{",".join(steps)}
 SELECT id, round(rank, 6) AS rank FROM r{k}
 """
 
@@ -3225,17 +3229,16 @@ WITH {tri_cte},
 {_UE_CTE},
 {_LPA2_LBL_CTE},
 up AS (SELECT src AS u, dst AS w FROM ue WHERE src < dst),
-m AS (SELECT CAST(count(*) AS DOUBLE) AS m FROM up),
+m AS (SELECT count(*) AS m FROM up),
 deg AS (SELECT src AS id, count(*) AS deg FROM ue GROUP BY src),
 degsum AS (SELECT l.label, SUM(COALESCE(deg.deg, 0)) AS deg_sum
            FROM lbl l LEFT JOIN deg ON deg.id = l.id GROUP BY l.label),
 intra AS (SELECT la.label, count(*) AS intra_edges
           FROM up JOIN lbl la ON la.id = up.u JOIN lbl lb ON lb.id = up.w
           WHERE la.label = lb.label GROUP BY la.label)
-SELECT d.label, COALESCE(i.intra_edges, 0) AS intra_edges, d.deg_sum,
-       CAST(round(COALESCE(i.intra_edges, 0) / m.m
-             - (d.deg_sum / (2 * m.m)) * (d.deg_sum / (2 * m.m)), 6)
-            AS DECIMAL(18,6)) AS contrib
+SELECT d.label, COALESCE(i.intra_edges, 0) AS intra_edges, d.deg_sum, m.m,
+       CAST(4 * m.m * COALESCE(i.intra_edges, 0) - d.deg_sum * d.deg_sum
+            AS BIGINT) AS q_num
 FROM degsum d LEFT JOIN intra i ON i.label = d.label CROSS JOIN m
 """,
         # integer-exact local-move argmax: score 2m*k - d*sig' (= gain

@@ -130,54 +130,88 @@ def vertices_from_edges(edges: DataFrame) -> DataFrame:
 def order_preserving_id_map(
     vertices: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
-    """(id string, vid long) with vid ordered exactly like id.
+    """(id string, vid long) with vid ordered exactly like id: monotone,
+    non-negative, NOT dense.
 
     Lets min-label algorithms (connected components, LPA tie-breaks)
     run their loops on 8-byte longs while producing byte-identical
     label assignments after mapping back: ``min(vid)`` picks the same
-    vertex as ``min(id)`` because the mapping is monotone.
+    vertex as ``min(id)`` because the mapping is monotone. No caller
+    needs density: CC needs a monotone min, LPA a monotone tie-break,
+    SSSP's foreign sources only ``vid >= 0`` (they take ``-1 - vid``).
 
-    Scalable, fully-native construction (zero Python in the row path —
-    the previous ``rdd.zipWithIndex`` round-tripped every row through
-    Python workers, the dominant setup cost of CC/LPA at scale):
+    Construction, fully native and with no action of its own: range-
+    repartition by id and sort within partitions, so partitions are
+    globally ordered and internally sorted; then
+    ``monotonically_increasing_id`` is ``(partition << 33) | row``
+    (its documented construction) — monotone in id, collision-free and
+    non-negative without any offsets pass.
 
-    1. range-repartition by id — partitions are globally ordered and
-       internally sorted;
-    2. ``monotonically_increasing_id`` on the frozen layout decomposes
-       as ``(partition_id << 33) | row_index_within_partition`` (its
-       documented construction), giving the intra-partition rank
-       without a window exchange;
-    3. per-partition counts (one tiny aggregation) -> cumulative
-       offsets, broadcast-joined back;
-       ``vid = offset[partition] + row_index``.
-
-    Requires distinct ids (callers pass the distinct vertex set); ties
-    would get arbitrary relative order across a range boundary.
+    The ids are nondeterministic until frozen: the caller materializes
+    the returned plan exactly ONCE (``engine.materialize``, alone or
+    under a repartition) before reading it twice. Requires distinct
+    ids (callers pass the distinct vertex set); ties would get
+    arbitrary relative order across a range boundary.
     """
-    spark = vertices.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = (
+    n_part = num_partitions or int(
+        vertices.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    return (
         vertices.select("id")
         .repartitionByRange(n_part, "id")
         .sortWithinPartitions("id")
-        .withColumn("_m", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)  # freeze the nondeterministic ids
+        .select("id", F.monotonically_increasing_id().alias("vid"))
     )
-    part = F.shiftrightunsigned("_m", 33)
-    local = F.col("_m").bitwiseAND(F.lit((1 << 33) - 1))
-    counts = (
-        base.groupBy(part.alias("_p")).agg(F.count(F.lit(1)).alias("_c")).collect()
+
+
+def undirected_vid_graph(
+    edges: DataFrame, num_partitions: int
+) -> tuple[DataFrame, DataFrame]:
+    """The static graph of the min-label loops (CC, LPA): ``(vmap, ue)``.
+
+    - ``vmap`` — (id, vid) over every endpoint of ``edges``
+      (:func:`order_preserving_id_map`), materialized once,
+      hash-partitioned on ``vid``: a projection of it is the loop's
+      initial state with no further exchange;
+    - ``ue`` — (src, dst) in vid space, both directions present exactly
+      once, no self-loops (:func:`undirect` semantics), materialized
+      hash-partitioned on ``src`` so the loop's scatter join starts
+      aligned.
+
+    The directed E rows are mapped to vids first, so the symmetrize +
+    dedup runs on 16-byte long pairs instead of 2E url pairs, and each
+    endpoint is joined once instead of once per direction."""
+    from .engine import materialize
+
+    vmap = materialize(
+        order_preserving_id_map(vertices_from_edges(edges), num_partitions)
+        .repartition(num_partitions, "vid")
     )
-    offsets, cum = [], 0
-    for r in sorted(counts, key=lambda r: r["_p"]):
-        offsets.append((r["_p"], cum))
-        cum += r["_c"]
-    odf = spark.createDataFrame(offsets, "_p long, _off long")
-    return (
-        base.withColumn("_p", part)
-        .join(F.broadcast(odf), "_p")
-        .select("id", (local + F.col("_off")).alias("vid"))
+    d = (
+        edges.select("src", "dst")
+        .join(vmap.withColumnRenamed("id", "src"), "src")
+        .select(F.col("vid").alias("src"), "dst")
+        .join(vmap.withColumnRenamed("id", "dst"), "dst")
+        .select("src", F.col("vid").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
     )
+    both = F.explode(
+        F.array(
+            F.struct("src", "dst"),
+            F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        )
+    )
+    # dedup on the src layout: the distinct needs no exchange of its
+    # own, and the closing repartition (what materialize keys its
+    # partitioning-preserving plan on) is planned away as redundant
+    ue = materialize(
+        d.select(both.alias("e"))
+        .select("e.src", "e.dst")
+        .repartition(num_partitions, "src")
+        .distinct()
+        .repartition(num_partitions, "src")
+    )
+    return vmap, ue
 
 
 def save_edges_bucketed(

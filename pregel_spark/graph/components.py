@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tableio import CheckpointManager
-from .build import order_preserving_id_map, undirect, vertices_from_edges
+from .build import undirected_vid_graph
 from .engine import (
     PregelResult,
     ShuffleDelta,
@@ -51,38 +51,29 @@ def connected_components(
     reachable treating edges as undirected.
 
     The loop runs on an ORDER-PRESERVING long mapping of the string ids
-    (``order_preserving_id_map``) — min-label semantics survive because
-    the mapping is monotone, the per-superstep shuffle carries 8-byte
-    keys instead of urls, and the final labels map back to the
-    identical strings.
+    (``order_preserving_id_map``: monotone, non-negative, not dense) —
+    min-label semantics survive because the mapping is monotone, the
+    per-superstep shuffle carries 8-byte keys instead of urls, and the
+    final labels map back to the identical strings. The vid map and the
+    symmetric vid edge table come from ``build.undirected_vid_graph``,
+    shared with LPA.
     """
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
 
-    vmap = materialize(
-        order_preserving_id_map(vertices_from_edges(edges), n_part)
-        .repartition(n_part, "vid")
-    )
-    ue = materialize(
-        undirect(edges)
-        .select("src", "dst")
-        .join(vmap.withColumnRenamed("id", "src"), "src")
-        .select(F.col("vid").alias("src"), "dst")
-        .join(vmap.withColumnRenamed("id", "dst"), "dst")
-        .select("src", F.col("vid").alias("dst"))
-        .repartition(n_part, "src")
-    )
+    vmap, ue = undirected_vid_graph(edges, n_part)
     # labels cover ALL vertices of the original edge table (including
     # self-loop-only vertices that undirect() drops as edges)
-    labels = materialize(
-        vmap.select(F.col("vid").alias("id"), F.col("vid").alias("component"))
-        .repartition(n_part, "id")
-    )
+    labels = vmap.select(F.col("vid").alias("id"), F.col("vid").alias("component"))
 
     def step(superstep, labels, frontier, _meta):
-        # scatter J2 + min-combine A1 (combiner = min, pregel/queue.lua:39-52)
-        msgs = ue.join(frontier.withColumnRenamed("id", "src"), "src").select(
+        # scatter J2 + min-combine A1 (combiner = min, pregel/queue.lua:39-52);
+        # the frontier is hash-partitioned on id like ue on src, so a
+        # shuffled-hash join needs no exchange — never a broadcast job
+        msgs = ue.join(
+            frontier.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+        ).select(
             F.col("dst").alias("id"), F.col("component").alias("cand")
         )
         mins = msgs.groupBy("id").agg(F.min("cand").alias("cand"))
@@ -198,22 +189,12 @@ def connected_components_star(
     oracle), via the order-preserving numeric id mapping.
     """
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = vertices_from_edges(edges)
-    vmap = materialize(
-        order_preserving_id_map(verts, n_part).repartition(n_part, "vid")
+    vmap, ue = undirected_vid_graph(edges, n_part)
+    # canonical undirected pairs: a row-local filter of the deduped,
+    # src-partitioned symmetric table
+    e = ue.filter(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    e = (
-        undirect(edges)
-        .select("src", "dst")
-        .join(vmap.withColumnRenamed("id", "src"), "src")
-        .select(F.col("vid").alias("u"), "dst")
-        .join(vmap.withColumnRenamed("id", "dst"), "dst")
-        .select("u", F.col("vid").alias("v"))
-        .filter(F.col("u") < F.col("v"))  # canonical undirected pairs
-    )
-    # dedup folded into the repartition: partitioned-on-u input makes
-    # dropDuplicates(u, v) exchange-free (subset rule)
-    e = materialize(e.repartition(n_part, "u").dropDuplicates(["u", "v"]))
 
     metrics: list[dict] = []
     converged = False

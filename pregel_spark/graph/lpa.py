@@ -54,7 +54,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tableio import CheckpointManager
-from .build import order_preserving_id_map, undirect, vertices_from_edges
+from .build import undirected_vid_graph
 from .engine import (
     PregelResult,
     Superstep,
@@ -79,9 +79,10 @@ def label_propagation(
     """Returns (id, label) after synchronous LPA.
 
     The loop runs on the order-preserving long mapping (see
-    ``connected_components``) — the mode count is relabel-invariant and
-    the min tie-break survives a monotone mapping, so assignments are
-    byte-identical after mapping back.
+    ``connected_components``; monotone, non-negative, not dense) — the
+    mode count is relabel-invariant and the min tie-break survives a
+    monotone mapping, so assignments are byte-identical after mapping
+    back.
 
     ``mode``: ``'rescatter'`` | ``'frontier'`` | ``'auto'`` (module
     docstring). ``'auto'`` picks ``'rescatter'`` — the measured winner
@@ -97,23 +98,8 @@ def label_propagation(
     run_id = run_id or uuid.uuid4().hex[:12]
     ckpt = CheckpointManager(checkpoint_dir, run_id) if checkpoint_dir else None
 
-    vmap = materialize(
-        order_preserving_id_map(vertices_from_edges(edges), n_part)
-        .repartition(n_part, "vid")
-    )
-    ue = materialize(
-        undirect(edges)
-        .select("src", "dst")
-        .join(vmap.withColumnRenamed("id", "src"), "src")
-        .select(F.col("vid").alias("src"), "dst")
-        .join(vmap.withColumnRenamed("id", "dst"), "dst")
-        .select("src", F.col("vid").alias("dst"))
-        .repartition(n_part, "src")
-    )
-    labels = materialize(
-        vmap.select(F.col("vid").alias("id"), F.col("vid").alias("label"))
-        .repartition(n_part, "id")
-    )
+    vmap, ue = undirected_vid_graph(edges, n_part)
+    labels = vmap.select(F.col("vid").alias("id"), F.col("vid").alias("label"))
     step = _frontier_step if mode == "frontier" else _rescatter_step
 
     with bsp_loop_confs(spark):
@@ -144,7 +130,11 @@ def label_propagation(
 
 def _rescatter_step(ue, labels, n_part, per_partition) -> Superstep:
     """Classic full-rescatter superstep: 2 O(E) exchanges per round."""
-    msgs = ue.join(labels.withColumnRenamed("id", "src"), "src").select(
+    # co-partitioned with ue: a shuffled-hash join with no exchange,
+    # never a broadcast job
+    msgs = ue.join(
+        labels.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+    ).select(
         F.col("dst").alias("id"), F.col("label").alias("cand")
     )
     counts = msgs.groupBy("id", "cand").agg(F.count(F.lit(1)).alias("n"))
@@ -193,7 +183,8 @@ def _frontier_step(ue, state, n_part, per_partition) -> Superstep:
         cmap0 = (
             ue.join(
                 state.withColumnRenamed("id", "src")
-                .withColumnRenamed("label", "cand"),
+                .withColumnRenamed("label", "cand")
+                .hint("shuffle_hash"),
                 "src",
             )
             .select(F.col("dst").alias("id"), "cand")

@@ -40,10 +40,16 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    SparkSession,
+    Window,
+    functions as F,
+)
 
 from ..tableio import CheckpointManager
-from .build import vertices_from_edges
 from .engine import (
     PregelResult,
     Superstep,
@@ -55,28 +61,42 @@ from .engine import (
 from .skew import salted_sum
 
 
+def key_hash(col: str) -> Column:
+    """The loop key of a vertex id in the numeric-id mode:
+    ``xxhash64(id)``. The vertex map, the edges, personalization sources
+    and warm-start ranks all hash through this one function."""
+    return F.xxhash64(col)
+
+
 class PreparedGraph:
     """The static per-run structures PageRank builds before its loop —
     degree-normalized link shares (persisted hash-partitioned on
-    ``src``), the vertex set, and the optional numeric-id map — bundled
-    so MULTI-RUN consumers (``spam_mass`` runs uniform + personalized
-    PageRank over the SAME graph; warm-start recrawl sweeps rerun over
-    one snapshot) pay the O(E) dedup/hash/persist setup ONCE. At web
-    scale the setup is two full passes over the edge table; sharing it
-    halves the fixed cost of every PageRank after the first.
+    ``src``) and the vertex map ``(vid, id, has_out)`` keyed like the
+    links — bundled so MULTI-RUN consumers (``spam_mass`` runs uniform
+    + personalized PageRank over the SAME graph; warm-start recrawl
+    sweeps rerun over one snapshot) pay the O(E) dedup/hash/persist
+    setup ONCE. At web scale the setup is two full passes over the edge
+    table; sharing it halves the fixed cost of every PageRank after the
+    first.
+
+    ``numeric``: the loop key is :func:`key_hash` of the id; else it is
+    the id string itself (``vid == id``).
 
     Callers own the lifecycle: ``release()`` frees the persisted link
     table when the last run is done (``pagerank`` only unpersists links
     it built itself)."""
 
-    def __init__(self, links, outdeg, verts, n, vmap, n_part, weighted):
+    def __init__(self, links, vmap, n, n_part, weighted, numeric):
         self.links = links
-        self.outdeg = outdeg
-        self.verts = verts
-        self.n = n
         self.vmap = vmap
+        self.n = n
         self.n_part = n_part
         self.weighted = weighted
+        self.numeric = numeric
+
+    def key(self, col: str) -> Column:
+        """The loop key of the id column ``col``."""
+        return key_hash(col) if self.numeric else F.col(col)
 
     def release(self) -> None:
         self.links.unpersist()
@@ -91,59 +111,77 @@ def prepare_graph(
     weighted: bool = False,
 ) -> PreparedGraph:
     """Build the static PageRank structures once (see
-    :class:`PreparedGraph`). Identical semantics to the inline setup in
-    :func:`pagerank` — in fact it IS that setup, factored out."""
+    :class:`PreparedGraph`) — the setup :func:`pagerank` runs inline —
+    in two actions:
+
+    1. the vertex map: ONE aggregation over the exploded endpoints,
+       ``groupBy(key).agg(min(id), max(id), max(is_src))``, whose
+       ``observe()`` metrics are the vertex count and the number of
+       keys shared by two ids (``min(id) != max(id)``). A 64-bit
+       collision (P ~ V^2 / 2^65) rebuilds the map on string keys;
+    2. the links: edges keyed, repartitioned on ``src``, deduped (or
+       weight-summed when ``weighted``) and divided by their per-src
+       weight sum, all on that one layout, then persisted and counted.
+
+    Unweighted edges carry weight 1.0, so both modes compute
+    ``share = w / Σw`` (exactly ``1 / outdeg`` when unweighted)."""
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if weighted:
-        dedup = edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
-    else:
-        dedup = edges.select("src", "dst")
-        if not pre_deduped:
-            dedup = dedup.distinct()
-    vmap = None
-    if numeric_ids:
-        str_verts = vertices_from_edges(dedup)
+    ends = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("id"), F.lit(True).alias("out")),
+                F.struct(F.col("dst").alias("id"), F.lit(False).alias("out")),
+            )
+        ).alias("e")
+    ).select("e.id", "e.out")
+    for numeric in (True, False) if numeric_ids else (False,):
+        key = key_hash if numeric else F.col
+        obs = Observation()
         vmap = materialize(
-            str_verts.select("id", F.xxhash64("id").alias("vid"))
+            ends.groupBy(key("id").alias("vid"))
+            .agg(
+                F.min("id").alias("id"),
+                F.max("id").alias("_hi"),
+                F.max("out").alias("has_out"),
+            )
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("id") != F.col("_hi")).cast("long")).alias("shared"),
+            )
+            .select("vid", "id", "has_out")
             .repartition(n_part, "vid")
         )
-        n_str = vmap.count()
-        if vmap.select("vid").distinct().count() != n_str:
-            # 64-bit collision (astronomically unlikely): string fallback
-            vmap = None
-        else:
-            dedup = materialize(
-                dedup.select(
-                    F.xxhash64("src").alias("src"),
-                    F.xxhash64("dst").alias("dst"),
-                    *([F.col("w")] if weighted else []),
-                )
-            )
+        if not obs.get["shared"]:
+            break
+    keyed = edges.select(
+        key("src").alias("src"),
+        key("dst").alias("dst"),
+        (F.col("weight") if weighted else F.lit(1.0)).alias("w"),
+    ).repartition(n_part, "src")
+    # on the src layout the dedup and the per-src window sum need no
+    # exchange of their own (their keys include src); a groupBy + join
+    # for the sum would plan the keyed shuffle twice
     if weighted:
-        outdeg = dedup.groupBy("src").agg(
-            F.count(F.lit(1)).alias("deg"), F.sum("w").alias("wsum")
-        )
-        share = F.col("w") / F.col("wsum")
+        dedup = keyed.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+    elif pre_deduped:
+        dedup = keyed
     else:
-        outdeg = dedup.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        share = F.lit(1.0) / F.col("deg")
+        dedup = keyed.dropDuplicates(["src", "dst"])
+    share = F.col("w") / F.sum("w").over(Window.partitionBy("src"))
     # persist (NOT localCheckpoint): keeps hashpartitioning(src) visible
     # to Catalyst, so the per-superstep scatter join never re-exchanges
-    # this O(E) side — only the O(V) ranks side shuffles. The explicit
-    # repartition is NOT redundant: if the outdeg join broadcasts, the
-    # join output keeps the scan's (unknown) partitioning and the loop
-    # would re-exchange the O(E) side EVERY superstep — measured as a
-    # ~27% loop slowdown at 100M edges when this was dropped.
+    # this O(E) side — only the O(V) ranks side shuffles (dropping the
+    # src layout measured as a ~27% loop slowdown at 100M edges). The
+    # closing repartition plans no exchange on the src-partitioned
+    # window output; it pins that layout for the cached plan.
     links = (
-        dedup.join(outdeg, "src")
-        .select("src", "dst", share.alias("share"))
+        dedup.select("src", "dst", share.alias("share"))
         .repartition(n_part, "src")
         .persist()
     )
     links.count()
-    verts = vertices_from_edges(dedup)
-    n = verts.count()
-    return PreparedGraph(links, outdeg, verts, n, vmap, n_part, weighted)
+    return PreparedGraph(links, vmap, obs.get["n"], n_part, weighted, numeric)
 
 
 def pagerank(
@@ -222,15 +260,13 @@ def pagerank(
             pre_deduped=pre_deduped,
             weighted=weighted,
         )
-    links, outdeg, verts = prepared.links, prepared.outdeg, prepared.verts
-    n, vmap, n_part = prepared.n, prepared.vmap, prepared.n_part
+    links, vmap = prepared.links, prepared.vmap
+    n, n_part, key = prepared.n, prepared.n_part, prepared.key
     if n == 0:
         if owns_links:
             links.unpersist()
-        empty_ids = vmap if vmap is not None else verts
         return PregelResult(
-            vertices=empty_ids.limit(0)
-            .select(F.col("id"), F.lit(0.0).alias("rank")),
+            vertices=vmap.limit(0).select(F.col("id"), F.lit(0.0).alias("rank")),
             supersteps=0,
             converged=True,
             metrics=[],
@@ -238,10 +274,12 @@ def pagerank(
         )
     src_df = None
     if sources is not None:
-        src_df = spark.createDataFrame([(s,) for s in sources], "id string")
-        if vmap is not None:
-            src_df = src_df.select(F.xxhash64("id").alias("id"))
-        src_df = src_df.distinct().join(verts, "id", "left_semi")
+        src_df = (
+            spark.createDataFrame([(s,) for s in sources], "id string")
+            .select(key("id").alias("id"))
+            .distinct()
+            .join(vmap.select(F.col("vid").alias("id")), "id", "left_semi")
+        )
         n_restart = src_df.count()
         if n_restart == 0:
             raise ValueError("no personalization source is present in the graph")
@@ -249,14 +287,14 @@ def pagerank(
         n_restart = n
     warm = None
     if initial_ranks is not None:
-        warm = initial_ranks.select("id", F.col("rank").alias("_warm"))
-        if vmap is not None:
-            warm = warm.select(F.xxhash64("id").alias("id"), "_warm")
+        warm = initial_ranks.select(
+            key("id").alias("id"), F.col("rank").alias("_warm")
+        )
         # a duplicate id in initial_ranks would fan out the vertex
         # table through the left join and silently inflate rank mass;
         # resolve deterministically (max) instead
         warm = warm.groupBy("id").agg(F.max("_warm").alias("_warm"))
-    base = verts.join(outdeg.withColumnRenamed("src", "id"), "id", "left_outer")
+    base = vmap.select(F.col("vid").alias("id"), "has_out")
     if src_df is not None:
         base = base.join(src_df.withColumn("_s", F.lit(True)), "id", "left_outer")
         cold = (
@@ -273,7 +311,7 @@ def pagerank(
     cols = [
         F.col("id"),
         init.alias("rank"),
-        F.col("deg").isNull().alias("is_dangling"),
+        (~F.col("has_out")).alias("is_dangling"),
     ]
     if src_df is not None:
         cols.append(F.col("_s").isNotNull().alias("is_source"))
@@ -364,7 +402,7 @@ def pagerank(
     if owns_links:
         links.unpersist()
     out = final.select("id", "rank")
-    if vmap is not None:
+    if prepared.numeric:
         out = (
             out.withColumnRenamed("id", "vid")
             .join(vmap, "vid")

@@ -451,10 +451,12 @@ def modularity(
     edges: DataFrame, labels: DataFrame, label_col: str = "label"
 ) -> DataFrame:
     """Newman modularity of a vertex partition over the undirected
-    simple graph: per-community rows ``(label, intra_edges, deg_sum,
-    contrib)`` with ``contrib = intra_edges/m - (deg_sum/(2m))**2``;
-    ``Q = sum(contrib)``. The quality number every community detection
-    (LPA here) is judged by — reference scope: §2.9 analytics extras.
+    simple graph: per-community rows ``(label, intra_edges, deg_sum, m,
+    contrib)`` with ``m`` the graph's edge count and
+    ``contrib = intra_edges/m - (deg_sum/(2m))**2``; ``Q = sum(contrib)``
+    (exactly ``sum(4*m*intra_edges - deg_sum**2) / (4*m**2)``). The
+    quality number every community detection (LPA here) is judged by —
+    reference scope: §2.9 analytics extras.
 
     Scale: one distinct-pair pass over E (the same least/greatest
     canonicalization as the triangle counter), two hash joins of the
@@ -504,6 +506,7 @@ def modularity(
             F.col("_lbl").alias(label_col),
             F.coalesce("intra_edges", F.lit(0)).alias("intra_edges"),
             "deg_sum",
+            F.col("_m").alias("m"),
             (
                 F.coalesce("intra_edges", F.lit(0)) / F.col("_m")
                 # x*x, not pow(x,2): bit-identical in every engine

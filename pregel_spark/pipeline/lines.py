@@ -20,8 +20,9 @@ Scale design:
   running totals under ``Window.partitionBy(spark_partition_id)``
   (parallel: each partition sorts locally), then tiny per-partition
   totals are collected (one row per partition), prefix-summed on the
-  driver, and broadcast-joined back. Same decomposition as
-  ``graph.build.order_preserving_id_map``.
+  driver, and broadcast-joined back (a cumulative sum needs the
+  offsets; ``graph.build.order_preserving_id_map``, which needs only
+  order, stops at the range layout).
 """
 
 from __future__ import annotations
@@ -273,7 +274,7 @@ def pack_sequences(
         .repartitionByRange(n_part, id_col)
         .withColumn("_p", F.spark_partition_id())
         # freeze the layout: _p must agree between the cumsum pass and
-        # the offsets pass below (same rationale as order_preserving_id_map)
+        # the offsets pass below
         .localCheckpoint(eager=True)
     )
     w = (

@@ -19,11 +19,14 @@ With --out, writes a CORRECTNESS_r*.json-shaped artifact: per-query
 
 from __future__ import annotations
 
+import atexit
 import json
 import math
 import os
+import shutil
 import struct
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +34,9 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from pregel_spark.session import get_spark
+
+DUCKDB_MEMORY_LIMIT = "4GB"
+DUCKDB_MAX_TEMP = "8GB"
 
 
 def canon(rows, cols):
@@ -84,6 +90,14 @@ def main():
     spark = get_spark("oracle-check", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
+    # bound each oracle: past the memory limit DuckDB spills to a temp
+    # dir under the system temp dir, itself capped, so a runaway oracle
+    # raises (a [FAIL-duck] row) instead of filling the disk
+    duck_tmp = tempfile.mkdtemp(prefix="check_oracles_duckdb_")
+    atexit.register(shutil.rmtree, duck_tmp, True)
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory = '{duck_tmp}'")
+    con.execute(f"SET max_temp_directory_size = '{DUCKDB_MAX_TEMP}'")
     for t in entrymod.TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
