@@ -338,13 +338,30 @@ ue AS (
 )
 """
 
+# min-label propagation to its fixpoint: round ``it`` holds every
+# vertex's label (the min over itself and its neighbors' labels of round
+# it-1; ``nb`` adds the self pairs), ``go`` whether any label fell. The
+# recursion stops one round after nothing changed; memory is V rows per
+# round (a diameter's worth of rounds), not the (vertex, reachable
+# vertex) pairs a reachability closure enumerates.
 _CC_CTE = """
-reach(id, lbl) AS (
-    SELECT src, src FROM ue
-    UNION
-    SELECT ue.dst, r.lbl FROM reach r JOIN ue ON ue.src = r.id
+nb(src, dst) AS (
+    SELECT src, dst FROM ue
+    UNION ALL
+    SELECT DISTINCT src, src FROM ue
 ),
-comp AS (SELECT id, min(lbl) AS component FROM reach GROUP BY id)
+lp(it, id, lbl, go) AS (
+    SELECT 0, src, src, true FROM (SELECT DISTINCT src FROM ue)
+    UNION ALL
+    SELECT it + 1, id, lbl, bool_or(lbl < own) OVER () FROM (
+        SELECT max(lp.it) AS it, nb.dst AS id, min(lp.lbl) AS lbl,
+               min(lp.lbl) FILTER (WHERE nb.src = nb.dst) AS own
+        FROM lp JOIN nb ON nb.src = lp.id
+        WHERE lp.go
+        GROUP BY nb.dst
+    )
+),
+comp AS (SELECT id, lbl AS component FROM lp WHERE it = (SELECT max(it) FROM lp))
 """
 
 

@@ -130,57 +130,72 @@ def vertices_from_edges(edges: DataFrame) -> DataFrame:
 def order_preserving_id_map(
     vertices: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
-    """(id string, vid long) with vid ordered exactly like id: monotone,
-    non-negative, NOT dense.
+    """(id string, vid long) with vid = the rank of id in the id set:
+    monotone, non-negative, dense.
 
     Lets min-label algorithms (connected components, LPA tie-breaks)
     run their loops on 8-byte longs while producing byte-identical
     label assignments after mapping back: ``min(vid)`` picks the same
-    vertex as ``min(id)`` because the mapping is monotone. No caller
-    needs density: CC needs a monotone min, LPA a monotone tie-break,
-    SSSP's foreign sources only ``vid >= 0`` (they take ``-1 - vid``).
+    vertex as ``min(id)`` because the mapping is monotone. The vid is a
+    function of the id set alone — not of ``num_partitions``, the
+    sampled range bounds or the input's row order — so a checkpoint
+    stored in vid space (CC, LPA, SSSP's numeric loop) resumes against
+    a map rebuilt under any partitioning.
 
-    Construction, fully native and with no action of its own: range-
-    repartition by id and sort within partitions, so partitions are
-    globally ordered and internally sorted; then
-    ``monotonically_increasing_id`` is ``(partition << 33) | row``
-    (its documented construction) — monotone in id, collision-free and
-    non-negative without any offsets pass.
+    Fully native construction (no Python in the row path):
 
-    The ids are nondeterministic until frozen: the caller materializes
-    the returned plan exactly ONCE (``engine.materialize``, alone or
-    under a repartition) before reading it twice. Requires distinct
-    ids (callers pass the distinct vertex set); ties would get
-    arbitrary relative order across a range boundary.
+    1. range-repartition by id and sort within partitions, so
+       partitions are globally ordered and internally sorted; there
+       ``monotonically_increasing_id`` is ``(partition << 33) | row``
+       (its documented construction);
+    2. freeze that layout with one materialization (the ids are
+       nondeterministic until then);
+    3. one tiny per-partition count ``collect`` gives each partition's
+       offset, applied as a literal-array lookup:
+       ``vid = offset[partition] + row``.
+
+    The returned plan is deterministic: read it as often as needed.
+    Requires distinct ids (callers pass the distinct vertex set); ties
+    would get arbitrary relative order across a range boundary.
     """
+    from .engine import materialize
+
     n_part = num_partitions or int(
         vertices.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    return (
+    base = materialize(
         vertices.select("id")
         .repartitionByRange(n_part, "id")
         .sortWithinPartitions("id")
-        .select("id", F.monotonically_increasing_id().alias("vid"))
+        .withColumn("_m", F.monotonically_increasing_id())
+    )
+    part = F.shiftrightunsigned("_m", 33)
+    counts = dict(
+        base.groupBy(part.alias("_p")).agg(F.count(F.lit(1)).alias("_c")).collect()
+    )
+    offsets, cum = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(cum)
+        cum += counts.get(p, 0)
+    off = F.array(*[F.lit(o).cast("long") for o in offsets])
+    return base.select(
+        "id",
+        (
+            F.element_at(off, (part + 1).cast("int"))
+            + F.col("_m").bitwiseAND(F.lit((1 << 33) - 1))
+        ).alias("vid"),
     )
 
 
-def undirected_vid_graph(
+def vid_edges(
     edges: DataFrame, num_partitions: int
 ) -> tuple[DataFrame, DataFrame]:
-    """The static graph of the min-label loops (CC, LPA): ``(vmap, ue)``.
-
-    - ``vmap`` — (id, vid) over every endpoint of ``edges``
-      (:func:`order_preserving_id_map`), materialized once,
-      hash-partitioned on ``vid``: a projection of it is the loop's
-      initial state with no further exchange;
-    - ``ue`` — (src, dst) in vid space, both directions present exactly
-      once, no self-loops (:func:`undirect` semantics), materialized
-      hash-partitioned on ``src`` so the loop's scatter join starts
-      aligned.
-
-    The directed E rows are mapped to vids first, so the symmetrize +
-    dedup runs on 16-byte long pairs instead of 2E url pairs, and each
-    endpoint is joined once instead of once per direction."""
+    """``(vmap, d)``: the vid map over every endpoint of ``edges``
+    (:func:`order_preserving_id_map`), materialized hash-partitioned on
+    ``vid`` — a projection of it is a loop's initial state with no
+    further exchange — and the directed E rows in vid space, self-loops
+    dropped (a plan). The base of the undirected loops' static graphs
+    (:func:`undirected_vid_graph`, star CC's canonical pairs)."""
     from .engine import materialize
 
     vmap = materialize(
@@ -195,6 +210,26 @@ def undirected_vid_graph(
         .select("src", F.col("vid").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
+    return vmap, d
+
+
+def undirected_vid_graph(
+    edges: DataFrame, num_partitions: int
+) -> tuple[DataFrame, DataFrame]:
+    """The static graph of the min-label loops (CC, LPA): ``(vmap, ue)``.
+
+    - ``vmap`` — see :func:`vid_edges`;
+    - ``ue`` — (src, dst) in vid space, both directions present exactly
+      once, no self-loops (:func:`undirect` semantics), materialized
+      hash-partitioned on ``src`` so the loop's scatter join starts
+      aligned.
+
+    The directed E rows are mapped to vids first, so the symmetrize +
+    dedup runs on 16-byte long pairs instead of 2E url pairs, and each
+    endpoint is joined once instead of once per direction."""
+    from .engine import materialize
+
+    vmap, d = vid_edges(edges, num_partitions)
     both = F.explode(
         F.array(
             F.struct("src", "dst"),

@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..tableio import CheckpointManager
-from .build import undirected_vid_graph
+from .build import undirected_vid_graph, vid_edges
 from .engine import (
     PregelResult,
     ShuffleDelta,
@@ -51,7 +51,7 @@ def connected_components(
     reachable treating edges as undirected.
 
     The loop runs on an ORDER-PRESERVING long mapping of the string ids
-    (``order_preserving_id_map``: monotone, non-negative, not dense) —
+    (``order_preserving_id_map``: monotone, non-negative, dense) —
     min-label semantics survive because the mapping is monotone, the
     per-superstep shuffle carries 8-byte keys instead of urls, and the
     final labels map back to the identical strings. The vid map and the
@@ -189,11 +189,16 @@ def connected_components_star(
     oracle), via the order-preserving numeric id mapping.
     """
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    vmap, ue = undirected_vid_graph(edges, n_part)
-    # canonical undirected pairs: a row-local filter of the deduped,
-    # src-partitioned symmetric table
-    e = ue.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
+    vmap, d = vid_edges(edges, n_part)
+    # canonical undirected pairs (E rows, not the 2E symmetric table);
+    # dedup folded into the repartition: partitioned-on-u input makes
+    # dropDuplicates(u, v) exchange-free (subset rule)
+    e = materialize(
+        d.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .repartition(n_part, "u")
+        .dropDuplicates(["u", "v"])
     )
 
     metrics: list[dict] = []

@@ -79,7 +79,7 @@ def label_propagation(
     """Returns (id, label) after synchronous LPA.
 
     The loop runs on the order-preserving long mapping (see
-    ``connected_components``; monotone, non-negative, not dense) — the
+    ``connected_components``; monotone, non-negative, dense) — the
     mode count is relabel-invariant and the min tie-break survives a
     monotone mapping, so assignments are byte-identical after mapping
     back.

@@ -68,6 +68,12 @@ def key_hash(col: str) -> Column:
     return F.xxhash64(col)
 
 
+def _key(col: str, numeric: bool) -> Column:
+    """The loop key of the id column ``col``: :func:`key_hash` of it in
+    the numeric-id mode, else the id string itself."""
+    return key_hash(col) if numeric else F.col(col)
+
+
 class PreparedGraph:
     """The static per-run structures PageRank builds before its loop —
     degree-normalized link shares (persisted hash-partitioned on
@@ -96,7 +102,7 @@ class PreparedGraph:
 
     def key(self, col: str) -> Column:
         """The loop key of the id column ``col``."""
-        return key_hash(col) if self.numeric else F.col(col)
+        return _key(col, self.numeric)
 
     def release(self) -> None:
         self.links.unpersist()
@@ -135,10 +141,9 @@ def prepare_graph(
         ).alias("e")
     ).select("e.id", "e.out")
     for numeric in (True, False) if numeric_ids else (False,):
-        key = key_hash if numeric else F.col
         obs = Observation()
         vmap = materialize(
-            ends.groupBy(key("id").alias("vid"))
+            ends.groupBy(_key("id", numeric).alias("vid"))
             .agg(
                 F.min("id").alias("id"),
                 F.max("id").alias("_hi"),
@@ -155,8 +160,8 @@ def prepare_graph(
         if not obs.get["shared"]:
             break
     keyed = edges.select(
-        key("src").alias("src"),
-        key("dst").alias("dst"),
+        _key("src", numeric).alias("src"),
+        _key("dst", numeric).alias("dst"),
         (F.col("weight") if weighted else F.lit(1.0)).alias("w"),
     ).repartition(n_part, "src")
     # on the src layout the dedup and the per-src window sum need no

@@ -63,7 +63,7 @@ from .engine import (
 _PRUNE_B = 256
 _PRUNE_FRONTIER_CAP = 100_000
 
-# Below this edge count the scale machinery (numeric-id mapping,
+# Below this edge count the scale machinery (dense numeric-id mapping,
 # `_b` bucket clustering + sortWithinPartitions) is skipped: its fixed
 # setup cost dominates small inputs (sssp_k8 at 591k edges measured
 # 5.9 s -> 10.0 s when the rework was unconditional, round-4 verdict)
@@ -204,7 +204,7 @@ def shortest_paths(
     would require the full |V|-1 Bellman-Ford rounds to be sound.
 
     ``numeric_ids`` (connected_components' scheme): map string ids to
-    monotone, non-negative longs once and run the loop on 8-byte keys. The per-superstep
+    dense longs once and run the loop on 8-byte keys. The per-superstep
     floor is the probe of the cached O(E) link table against the
     frontier hash map, and a long-key probe (LongHashedRelation)
     measured ~9x cheaper than string keys at equal row count — string
@@ -238,7 +238,7 @@ def shortest_paths(
     n_edges = edges.count() * (1 if directed else 2)
     vmap = None
     if numeric_ids and n_edges >= _SMALL_GRAPH_EDGES:
-        # Big graphs: build the cached table on long vids,
+        # Big graphs: build the cached table on dense long ids,
         # clustered by a src-hash bucket `_b` + sortWithinPartitions so
         # the in-memory columnar scan's per-batch min/max stats can
         # SKIP batches under a `_b IN (...)` filter — the
@@ -422,7 +422,7 @@ def shortest_paths(
 
     # one final O(V) projection: every vertex (plus foreign sources),
     # NULL dist where the wave never arrived; numeric mode maps the
-    # vids back to the original string ids
+    # dense vids back to the original string ids
     verts = vertices_from_edges(links).unionByName(src_df).distinct()
     out = verts.join(full.select("id", "dist"), "id", "left_outer").select(
         "id", "dist"
@@ -453,10 +453,10 @@ def write_edge_buckets(
 ) -> None:
     """The SSSP 100 TB path, step 1 (same shape as the IVF index,
     ``pipeline/simsearch.write_ivf_index``): symmetrize/cast ONCE,
-    map string ids to longs once (``order_preserving_id_map``:
-    monotone, non-negative, not dense — the map every big in-memory
-    loop builds per run; here it is part of the static corpus layout
-    and amortizes over every query against the index), and write
+    map string ids to DENSE LONGS once (the ``order_preserving_id_map``
+    every big in-memory loop builds per-run — here it is part of the
+    static corpus layout and amortizes over every query against the
+    index), and write
 
     - ``edges`` — (src, dst, weight) in vid space, parquet-partitioned
       by ``bucket = pmod(xxhash64(src), buckets)``;
@@ -541,11 +541,11 @@ def shortest_paths_indexed(
     buckets = spark.read.parquet(f"{path}/meta").collect()[0]["buckets"]
     edges_path = f"{path}/edges"
 
-    # the index stores edges in long vid space (see
+    # the index stores edges in dense-long vid space (see
     # write_edge_buckets); sources map in at entry, results map back at
     # exit. Foreign sources (ids absent from the graph) get
     # deterministic NEGATIVE vids (never colliding with the index's
-    # non-negative space) so they still appear in the output.
+    # dense non-negative space) so they still appear in the output.
     vmap = spark.read.parquet(f"{path}/vmap")
     src_in = _as_source_df(spark, sources)
     fmap = order_preserving_id_map(
@@ -669,7 +669,7 @@ def shortest_paths_indexed(
     out = verts.join(full.select("id", "dist"), "id", "left_outer").select(
         "id", "dist"
     )
-    # map vids back to the original string ids
+    # map dense vids back to the original string ids
     out = materialize(
         out.withColumnRenamed("id", "_v")
         .join(allmap.withColumnRenamed("vid", "_v"), "_v")

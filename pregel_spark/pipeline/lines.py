@@ -20,9 +20,8 @@ Scale design:
   running totals under ``Window.partitionBy(spark_partition_id)``
   (parallel: each partition sorts locally), then tiny per-partition
   totals are collected (one row per partition), prefix-summed on the
-  driver, and broadcast-joined back (a cumulative sum needs the
-  offsets; ``graph.build.order_preserving_id_map``, which needs only
-  order, stops at the range layout).
+  driver, and broadcast-joined back. Same decomposition as
+  ``graph.build.order_preserving_id_map``.
 """
 
 from __future__ import annotations
@@ -274,7 +273,7 @@ def pack_sequences(
         .repartitionByRange(n_part, id_col)
         .withColumn("_p", F.spark_partition_id())
         # freeze the layout: _p must agree between the cumsum pass and
-        # the offsets pass below
+        # the offsets pass below (same rationale as order_preserving_id_map)
         .localCheckpoint(eager=True)
     )
     w = (

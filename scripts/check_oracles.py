@@ -35,7 +35,6 @@ import duckdb
 import __spark_entry__ as entrymod
 from pregel_spark.session import get_spark
 
-DUCKDB_MEMORY_LIMIT = "4GB"
 DUCKDB_MAX_TEMP = "8GB"
 
 
@@ -90,12 +89,12 @@ def main():
     spark = get_spark("oracle-check", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    # bound each oracle: past the memory limit DuckDB spills to a temp
-    # dir under the system temp dir, itself capped, so a runaway oracle
-    # raises (a [FAIL-duck] row) instead of filling the disk
+    # bound each oracle's spill: past its (default) memory limit DuckDB
+    # spills to a temp dir under the system temp dir, itself capped, so
+    # a runaway oracle raises (a [FAIL-duck] row) instead of filling the
+    # disk
     duck_tmp = tempfile.mkdtemp(prefix="check_oracles_duckdb_")
     atexit.register(shutil.rmtree, duck_tmp, True)
-    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
     con.execute(f"SET temp_directory = '{duck_tmp}'")
     con.execute(f"SET max_temp_directory_size = '{DUCKDB_MAX_TEMP}'")
     for t in entrymod.TABLES:
