@@ -13,7 +13,7 @@ from .build import (
     undirect,
     vertex_sample_pred,
 )
-from .engine import Pregel, PregelResult
+from .engine import Pregel, PregelResult, VertexProgram
 from .pagerank import PreparedGraph, pagerank, prepare_graph, spam_mass
 from .components import connected_components, connected_components_star
 from .lpa import label_propagation
@@ -92,6 +92,7 @@ __all__ = [
     "modularity_weighted",
     "four_cliques",
     "PregelResult",
+    "VertexProgram",
     "PreparedGraph",
     "pagerank",
     "prepare_graph",

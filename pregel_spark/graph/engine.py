@@ -14,10 +14,15 @@ The mapping, operator by operator:
   iff NOT (inbox empty AND halted); skipped rows pass through;
 - wake-before-compute (``pregel/worker.lua:158``) -> participating rows
   enter compute with ``halted=false``;
-- the user ``compute`` callback (``pregel/worker.lua:159``) ->
-  Arrow-batched ``applyInPandas`` over hash buckets of vertices (the
-  generic tier; built-in algorithms use pure-expression kernels
-  instead);
+- the user ``compute`` callback (``pregel/worker.lua:159``) -> two
+  forms. A :class:`VertexProgram` (a combiner plus ``apply`` / ``send``
+  Column expressions) compiles to the plan shape of the native kernels:
+  ``edges ⋈ senders`` -> ``groupBy(id).agg(combine)`` -> ``state ⟕
+  inbox``, one Catalyst job per superstep with no Python in the row
+  path. An arbitrary Python ``compute`` runs as Arrow-batched
+  ``applyInPandas`` over hash buckets of vertices, which is also the
+  path for no-combiner inboxes, mutations, aggregators and initial
+  messages;
 - double-buffered queues (``pregel/worker.lua:181-195``) -> loop
   variable rebinding of immutable DataFrames;
 - global aggregators (``pregel/aggregator.lua``) -> driver-collected
@@ -323,6 +328,26 @@ _COMBINERS: dict[str, Callable[[Column], Column]] = {
 _FOLDS = {"sum": sum, "max": max, "min": min}
 
 
+@dataclass(frozen=True)
+class VertexProgram:
+    """A vertex program written as Column expressions, which
+    :meth:`Pregel.run` compiles to one Catalyst job per superstep.
+
+    - ``combine``: the message combiner (``pregel/queue.lua:39-52``), a
+      key of ``_COMBINERS``;
+    - ``apply(value, msg)``: the new value; ``msg`` is the combined
+      inbox, null when no mail arrived;
+    - ``send(old, new, superstep)``: the message to every out-neighbor,
+      null to send none;
+    - ``halt``: the vote to halt after compute (mail wakes a halted
+      vertex, ``pregel/worker.lua:158``)."""
+
+    combine: str
+    apply: Callable[[Column, Column], Column]
+    send: Callable[[Column, Column, Column], Column]
+    halt: bool = True
+
+
 def materialize_step(
     plan: DataFrame, per_partition: bool, **stats: tuple[str, Column]
 ) -> tuple[DataFrame, dict, list[dict]]:
@@ -473,7 +498,8 @@ class Pregel:
     ``vertices``: DataFrame (id string, value <V>, halted boolean) —
     ``halted`` optional, defaults false (``pregel/worker.lua:335``).
     ``edges``: DataFrame (src, dst, weight); adjacency is CSR-blocked
-    into the compute input when ``with_adjacency``.
+    into a Python compute's input when ``with_adjacency``, while a
+    :class:`VertexProgram` joins its senders to the edges directly.
     """
 
     def __init__(
@@ -586,10 +612,92 @@ class Pregel:
             )
         return state, edges, adj
 
+    # -- the compiled loop ---------------------------------------------
+    def _run_program(
+        self,
+        prog: VertexProgram,
+        value_type: str,
+        msg_type: str,
+        max_supersteps: int,
+        resume: bool,
+    ) -> PregelResult:
+        """One superstep = one job: deliver last superstep's messages
+        (``edges ⋈ senders``, combined by ``groupBy(id)``), then compute
+        every participant (not halted, or mailed) in the same projection
+        over ``state ⟕ inbox``. The state carries each vertex's outgoing
+        message ``_out`` (what a checkpoint saves in place of an outbox)
+        and its out-degree ``_deg``, so ``msgs_out`` is the count of
+        messages the send fans out to."""
+        n_part = self.num_partitions
+        # edges on src and state on id share one hash layout: the
+        # scatter join plans no exchange, and no broadcast job
+        edges = materialize(self.edges.select("src", "dst").repartition(n_part, "src"))
+        deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("dst").alias("_deg"))
+        state = materialize(
+            self.vertices.join(deg, "id", "left_outer")
+            .select(
+                "id", "value", "halted",
+                F.coalesce("_deg", F.lit(0)).alias("_deg"),
+                F.lit(None).cast(msg_type).alias("_out"),
+            )
+            .repartition(n_part, "id")
+        )
+        combine = _COMBINERS[prog.combine]
+
+        def step(superstep, state, _second, _meta):
+            senders = state.filter(F.col("_out").isNotNull()).select(
+                F.col("id").alias("src"), "_out"
+            )
+            inbox = (
+                edges.join(senders.hint("shuffle_hash"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(combine("_out").alias("_msg"))
+            )
+            value = F.col("value")
+            new = prog.apply(value, F.col("_msg")).cast(value_type)
+            # wake-before-compute: halted vertices with mail participate;
+            # the rest pass through unchanged and send nothing
+            go = ~F.col("halted") | F.col("_msg").isNotNull()
+            plan = state.join(inbox, "id", "left_outer").select(
+                "id",
+                F.when(go, new).otherwise(value).alias("value"),
+                F.when(go, F.lit(prog.halt)).otherwise(F.col("halted")).alias("halted"),
+                "_deg",
+                F.when(go, prog.send(value, new, F.lit(superstep)))
+                .cast(msg_type)
+                .alias("_out"),
+            )
+            nxt, stats, parts = materialize_step(
+                plan,
+                self.ckpt is not None,
+                msgs_out=("sum", F.when(F.col("_out").isNotNull(), F.col("_deg"))),
+                active=("sum", (~F.col("halted")).cast("long")),
+            )
+            return Superstep(
+                nxt,
+                stats,
+                stats["msgs_out"] == 0 and stats["active"] == 0,
+                partitions=parts,
+            )
+
+        with bsp_loop_confs(self.spark):
+            res = run_supersteps(
+                step,
+                state,
+                run_id=self.run_id,
+                max_steps=max_supersteps,
+                num_partitions=n_part,
+                ckpt=self.ckpt,
+                checkpoint_interval=self.checkpoint_interval,
+                resume=resume,
+            )
+        res.vertices = res.vertices.select("id", "value", "halted")
+        return res
+
     # -- the loop ------------------------------------------------------
     def run(
         self,
-        compute: ComputeFn,
+        compute: ComputeFn | VertexProgram,
         value_type: str,
         msg_type: str,
         combiner: str | Callable[[Column], Column] | None = None,
@@ -600,13 +708,47 @@ class Pregel:
         resume: bool = False,
         with_mutations: bool = False,
     ) -> PregelResult:
-        """``with_mutations``: the compute output gains a ``muts``
+        """``compute``: a :class:`VertexProgram`, compiled to one
+        Catalyst job per superstep, or a Python function over pandas
+        batches of vertices, run through ``applyInPandas``. A program
+        owns its combiner and sends along the edges; the features only
+        the Python path has (``combiner``, ``initial_msgs``,
+        ``aggregators``, ``with_mutations``, ``worker_context``) raise
+        ``ValueError`` with a program.
+
+        ``with_mutations``: the compute output gains a ``muts``
         column — ``array<struct<kind:int, a:string, b:string,
         value:V>>`` with kind 0=delete-edge(a->b), 1=delete-vertex(a),
         2=add-vertex(a, value), 3=add-edge(a->b) — applied at the
         superstep barrier in the reference's fixed order
         (``pregel/worker.lua:196-309``); adjacency is rebuilt only on
         supersteps that actually mutated."""
+        if isinstance(compute, VertexProgram):
+            if compute.combine not in _COMBINERS:
+                raise ValueError(
+                    f"a VertexProgram needs a combiner, one of {sorted(_COMBINERS)}; "
+                    "no-combiner inboxes run on a Python compute"
+                )
+            extra = [
+                name
+                for name, given in (
+                    ("combiner", combiner is not None),
+                    ("initial_msgs", initial_msgs is not None),
+                    ("aggregators", bool(aggregators)),
+                    ("with_mutations", with_mutations),
+                    ("worker_context", self.worker_context is not None),
+                    ("edges=None", self.edges is None),
+                )
+                if given
+            ]
+            if extra:
+                raise ValueError(
+                    f"a VertexProgram does not take {', '.join(extra)}; "
+                    "use a Python compute"
+                )
+            return self._run_program(
+                compute, value_type, msg_type, max_supersteps, resume
+            )
         spark = self.spark
         n_part = self.num_partitions
         out_schema = (

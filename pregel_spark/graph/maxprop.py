@@ -1,14 +1,20 @@
 """Max-value propagation — parity port of the reference's only in-tree
-algorithm (``example/test-worker.lua:25-43``), run on the GENERIC
-Pregel tier (``engine.Pregel``) to exercise the U1/U2 callback surface:
+algorithm (``example/test-worker.lua:25-43``), on the GENERIC Pregel
+tier (``engine.Pregel``), the U1/U2 callback surface:
 
-- user ``compute``: adopt max(inbox ∪ {value}); if improved (or first
+- the vertex program: adopt max(inbox ∪ {value}); if improved (or first
   superstep) send the new value to all out-neighbors; always vote halt
   (woken by mail — ``pregel/worker.lua:158``);
-- ``combiner='max'`` (the example's ``math.max``,
+- ``combine='max'`` (the example's ``math.max``,
   ``example/test-worker.lua:54``);
 - termination by quiescence with a 30-superstep cap
   (``example/test-worker.lua:28-29``, ``pregel/master.lua:77-84``).
+
+:data:`PROGRAM` writes it as Column expressions, which
+:func:`max_propagation` runs compiled (one Catalyst job per superstep,
+no Python in the row path). :func:`_compute` is the same program as a
+pandas ``compute`` for the ``applyInPandas`` path, kept as the
+reference the compiled one is tested against.
 
 Run over the symmetrized graph, the fixpoint is the per-component max
 (union-find oracle, FIXTURES.md §6).
@@ -20,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import undirect, vertices_from_edges
-from .engine import ComputeContext, Pregel, PregelResult
+from .engine import ComputeContext, Pregel, PregelResult, VertexProgram
 
 
 def _is_seq(x) -> bool:
@@ -55,6 +61,14 @@ def _compute(pdf: pd.DataFrame, ctx: ComputeContext) -> pd.DataFrame:
     )
 
 
+PROGRAM = VertexProgram(
+    combine="max",
+    apply=lambda value, msg: F.greatest(value, msg),
+    send=lambda old, new, superstep: F.when((superstep == 1) | (new > old), new),
+    halt=True,
+)
+
+
 def max_propagation(
     spark: SparkSession,
     vertices: DataFrame,
@@ -72,12 +86,10 @@ def max_propagation(
     )
     eng = Pregel(spark, verts, e, **engine_kwargs)
     res = eng.run(
-        compute=_compute,
+        compute=PROGRAM,
         value_type="long",
         msg_type="long",
-        combiner="max",
         max_supersteps=max_supersteps,
-        with_adjacency=True,
     )
     res.vertices = res.vertices.select("id", "value")
     return res

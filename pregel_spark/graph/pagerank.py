@@ -11,8 +11,9 @@ Spark plan per superstep (see module docstring of engine.py for the
 reference mapping):
 - scatter join J2: ``links ⋈ ranks`` on ``src`` — both sides hash-
   partitioned on the key with the same partition count, so the
-  sort-merge join starts aligned (no extra exchange of the static,
-  cached ``links`` side);
+  shuffled-hash join (hinted on the ranks, which it builds) starts
+  aligned: no exchange of the static, cached ``links`` side and no
+  broadcast job for the ranks;
 - gather+combine A1/J1: ``groupBy(dst).sum(contrib)`` — Catalyst's
   partial aggregation is the map-side combine, which already collapses
   hub skew for algebraic sums (see skew.py for why salting is not
@@ -320,28 +321,35 @@ def pagerank(
     ]
     if src_df is not None:
         cols.append(F.col("_s").isNotNull().alias("is_source"))
-    ranks = base.select(*cols).repartition(n_part, "id").persist()
-    if warm is not None:
-        tot = ranks.agg(F.sum("rank").alias("t")).collect()[0]["t"] or 1.0
-        # withColumn preserves the hash partitioning on id (narrow dep)
-        normalized = ranks.withColumn(
-            "rank", F.col("rank") / F.lit(float(tot))
-        ).persist()
-        normalized.count()
-        ranks.unpersist()
-        ranks = normalized
-    row = ranks.agg(
-        F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm")
-    ).collect()[0]
-    dm = row["dm"] or 0.0
-    start = ranks  # persisted; freed once the first superstep replaced it
+    ranks = base.select(*cols).repartition(n_part, "id")
+    dm = 0.0
+    # a resume replaces the start vector and its dangling mass with the
+    # checkpoint's state and meta: build neither
+    if not (resume and ckpt is not None and ckpt.latest() is not None):
+        ranks = ranks.persist()
+        if warm is not None:
+            tot = ranks.agg(F.sum("rank").alias("t")).collect()[0]["t"] or 1.0
+            # withColumn preserves the hash partitioning on id (narrow dep)
+            normalized = ranks.withColumn(
+                "rank", F.col("rank") / F.lit(float(tot))
+            ).persist()
+            normalized.count()
+            ranks.unpersist()
+            ranks = normalized
+        row = ranks.agg(
+            F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm")
+        ).collect()[0]
+        dm = row["dm"] or 0.0
+    start = ranks  # persisted unless resuming; freed once the first superstep replaced it
     keep = ["id", "rank", "is_dangling"] + (["is_source"] if src_df is not None else [])
 
     def step(superstep, ranks, _, meta):
         dm = meta["dm"]
-        contribs = links.join(ranks.withColumnRenamed("id", "src"), "src").select(
-            "dst", (F.col("rank") * F.col("share")).alias("contrib")
-        )
+        # the ranks are hash-partitioned on id like the links on src: a
+        # shuffled-hash join needs no exchange, and no broadcast job
+        contribs = links.join(
+            ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+        ).select("dst", (F.col("rank") * F.col("share")).alias("contrib"))
         if use_salted:
             sums = salted_sum(contribs, "dst", "contrib").withColumnRenamed(
                 "sum_contrib", "s"

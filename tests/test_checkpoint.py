@@ -13,7 +13,7 @@ from pregel_spark import tableio
 from pregel_spark.graph import connected_components, label_propagation, pagerank
 from pregel_spark.graph.build import undirect, vertices_from_edges
 from pregel_spark.graph.engine import Pregel
-from pregel_spark.graph.maxprop import _compute as maxprop_compute
+from pregel_spark.graph.maxprop import PROGRAM, _compute as maxprop_compute
 from pregel_spark.tableio import CheckpointManager, read_manifest, write_table
 from pyspark.sql import functions as F
 from tests.conftest import edges_df
@@ -51,23 +51,29 @@ def _lpa(mode):
     return run
 
 
-def _maxprop(spark, e, resume=False, max_steps=30, **ck):
+def _maxprop(program):
     """``max_propagation``'s program on the generic tier, driven through
-    ``Pregel.run`` so the run can resume."""
-    ue = undirect(e)
-    verts = vertices_from_edges(ue).select(
-        "id", (F.abs(F.hash("id")) % 97).cast("long").alias("value")
-    )
-    res = Pregel(spark, verts, ue, **ck).run(
-        compute=maxprop_compute,
-        value_type="long",
-        msg_type="long",
-        combiner="max",
-        max_supersteps=max_steps,
-        resume=resume,
-    )
-    res.vertices = res.vertices.select("id", "value")
-    return res
+    ``Pregel.run`` so the run can resume: compiled, or as the pandas
+    ``compute``."""
+
+    def run(spark, e, resume=False, max_steps=30, **ck):
+        ue = undirect(e)
+        verts = vertices_from_edges(ue).select(
+            "id", (F.abs(F.hash("id")) % 97).cast("long").alias("value")
+        )
+        kw = {} if program else {"combiner": "max"}
+        res = Pregel(spark, verts, ue, **ck).run(
+            compute=PROGRAM if program else maxprop_compute,
+            value_type="long",
+            msg_type="long",
+            max_supersteps=max_steps,
+            resume=resume,
+            **kw,
+        )
+        res.vertices = res.vertices.select("id", "value")
+        return res
+
+    return run
 
 
 # small graphs that converge in 4-7 supersteps: every run pays Spark's
@@ -80,7 +86,8 @@ CASES = {
     "cc": (_cc, "component", two_components(n=20), 3, 3),
     "lpa_rescatter": (_lpa("rescatter"), "label", LPA_GRAPH, 3, 3),
     "lpa_frontier": (_lpa("frontier"), "label", LPA_GRAPH, 3, 3),
-    "max_propagation": (_maxprop, "value", CHAIN, 2, 2),
+    "max_propagation": (_maxprop(False), "value", CHAIN, 2, 2),
+    "max_propagation_program": (_maxprop(True), "value", CHAIN, 2, 2),
 }
 
 

@@ -1,11 +1,14 @@
-"""Generic Pregel tier: aggregators, no-combiner inbox, halting."""
+"""Generic Pregel tier: aggregators, no-combiner inbox, halting, and
+compiled vertex programs against their pandas reference."""
 
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from pregel_spark.graph import Pregel
+from pregel_spark.graph import Pregel, VertexProgram
+from pregel_spark.graph.maxprop import PROGRAM, _compute as maxprop_compute
 from tests.conftest import edges_df
 from tests.graphs import TOY7
 
@@ -165,3 +168,86 @@ def test_worker_context_lookup(spark):
     assert {m["superstep"] for m in res.partition_metrics} <= {1, 2}
     assert sum(m["rows"] for m in res.partition_metrics
                if m["superstep"] == 1) == 3
+
+
+# directed, two components: a cycle a-b-c with a sink s and an edge to
+# "ghost", which the vertex table lacks (its mail is dropped but still
+# counted as sent); a chain d->e->f->g with a parallel d->e edge
+# (counted twice); an isolated vertex i
+MAXPROP_EDGES = [
+    ("a", "b"), ("b", "c"), ("c", "a"), ("c", "s"), ("a", "ghost"),
+    ("d", "e"), ("d", "e"), ("e", "f"), ("f", "g"),
+]
+MAXPROP_VALUES = {"a": 1, "b": 5, "c": 2, "s": 0, "d": 9, "e": 3, "f": 1, "g": 4, "i": 7}
+
+
+def _maxprop_run(spark, compute, max_supersteps):
+    vdf = spark.createDataFrame(list(MAXPROP_VALUES.items()), "id string, value long")
+    kw = {} if compute is PROGRAM else {"combiner": "max"}
+    return Pregel(spark, vdf, edges_df(spark, MAXPROP_EDGES)).run(
+        compute=compute,
+        value_type="long",
+        msg_type="long",
+        max_supersteps=max_supersteps,
+        **kw,
+    )
+
+
+@pytest.mark.parametrize("max_supersteps", [2, 30])
+def test_maxprop_program_matches_pandas_compute(spark, max_supersteps):
+    """The compiled program and the pandas ``compute`` are one program on
+    two paths: same values, superstep count, convergence and per-step
+    message and active counts, at a cap and to the fixpoint."""
+    runs = []
+    for compute in (PROGRAM, maxprop_compute):
+        res = _maxprop_run(spark, compute, max_supersteps)
+        runs.append(
+            (
+                {r["id"]: r["value"] for r in res.vertices.collect()},
+                res.supersteps,
+                res.converged,
+                [(m["msgs_out"], m["active"]) for m in res.metrics],
+            )
+        )
+    assert runs[0] == runs[1]
+    values, supersteps, converged, counts = runs[0]
+    # superstep 1: every vertex is active and sends along all 9 edges
+    assert counts[0] == (9, 0)
+    if max_supersteps == 2:
+        assert supersteps == 2 and not converged
+    else:
+        # the fixpoint: each vertex holds the max over the vertices
+        # that reach it
+        reach = {v: {v} for v in MAXPROP_VALUES}
+        for _ in MAXPROP_VALUES:
+            for s, t in MAXPROP_EDGES:
+                if s in reach and t in reach:
+                    reach[t] |= reach[s]
+        assert values == {v: max(MAXPROP_VALUES[u] for u in us) for v, us in reach.items()}
+        assert converged and counts[-1] == (0, 0)
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"with_mutations": True},
+        {"aggregators": {"total": (0, lambda df: F.sum("value"))}},
+        {"initial_msgs": "df"},
+        {"combiner": None},
+    ],
+    ids=["with_mutations", "aggregators", "initial_msgs", "combiner=None"],
+)
+def test_program_rejects_python_path_features(spark, kwargs):
+    """Features only the applyInPandas path has raise with a program;
+    ``combiner=None`` is a program with no combiner (a no-combiner
+    inbox)."""
+    vdf = spark.createDataFrame([("a", 1)], "id string, value long")
+    prog = PROGRAM
+    if "combiner" in kwargs:
+        prog = VertexProgram(kwargs.pop("combiner"), PROGRAM.apply, PROGRAM.send)
+    if kwargs.get("initial_msgs") == "df":
+        kwargs["initial_msgs"] = spark.createDataFrame([("a", 2)], "id string, msg long")
+    with pytest.raises(ValueError):
+        Pregel(spark, vdf, edges_df(spark, [("a", "a")])).run(
+            compute=prog, value_type="long", msg_type="long", **kwargs
+        )
