@@ -338,14 +338,14 @@ class VertexProgram:
     - ``apply(value, msg)``: the new value; ``msg`` is the combined
       inbox, null when no mail arrived;
     - ``send(old, new, superstep)``: the message to every out-neighbor,
-      null to send none;
-    - ``halt``: the vote to halt after compute (mail wakes a halted
-      vertex, ``pregel/worker.lua:158``)."""
+      null to send none.
+
+    Every vertex that computes votes to halt, and mail wakes it
+    (``pregel/worker.lua:158``), as on the pandas path."""
 
     combine: str
     apply: Callable[[Column, Column], Column]
     send: Callable[[Column, Column, Column], Column]
-    halt: bool = True
 
 
 def materialize_step(
@@ -399,6 +399,13 @@ class Superstep:
     partitions: list[dict] = field(default_factory=list)
 
 
+def resume_point(ckpt: CheckpointManager | None, resume: bool) -> int | None:
+    """The superstep :func:`run_supersteps` resumes from: the latest
+    completed checkpoint when ``resume`` is set, else None (a cold
+    start)."""
+    return ckpt.latest() if resume and ckpt is not None else None
+
+
 def run_supersteps(
     step: Callable[[int, DataFrame, DataFrame | None, dict], Superstep],
     state: DataFrame,
@@ -419,7 +426,9 @@ def run_supersteps(
     - Resume: with ``resume`` and a completed checkpoint, the latest
       one's state, second table and meta replace the arguments
       (re-hashed on ``id`` into ``num_partitions``); a checkpoint of the
-      converging superstep returns at once.
+      converging superstep returns at once. :func:`resume_point` names
+      that checkpoint, so a caller can skip building a start state the
+      resume would replace.
     - Numbering from 1 (``pregel/master.lua:57``) up to ``max_steps``,
       with each superstep's ``wall_ms`` and its metrics row (plus
       shuffle deltas when the UI is on, :class:`ShuffleDelta`).
@@ -435,7 +444,7 @@ def run_supersteps(
     spark = state.sparkSession
     meta = meta or {}
     start = 1
-    latest = ckpt.latest() if resume and ckpt is not None else None
+    latest = resume_point(ckpt, resume)
     if latest is not None:
         st, sec, meta = ckpt.load(spark, latest)
         state = materialize(st.repartition(num_partitions, "id"))
@@ -656,12 +665,13 @@ class Pregel:
             value = F.col("value")
             new = prog.apply(value, F.col("_msg")).cast(value_type)
             # wake-before-compute: halted vertices with mail participate;
-            # the rest pass through unchanged and send nothing
+            # the rest pass through unchanged and send nothing. Every
+            # participant votes to halt, so after the step all are halted
             go = ~F.col("halted") | F.col("_msg").isNotNull()
             plan = state.join(inbox, "id", "left_outer").select(
                 "id",
                 F.when(go, new).otherwise(value).alias("value"),
-                F.when(go, F.lit(prog.halt)).otherwise(F.col("halted")).alias("halted"),
+                F.lit(True).alias("halted"),
                 "_deg",
                 F.when(go, prog.send(value, new, F.lit(superstep)))
                 .cast(msg_type)
@@ -671,12 +681,11 @@ class Pregel:
                 plan,
                 self.ckpt is not None,
                 msgs_out=("sum", F.when(F.col("_out").isNotNull(), F.col("_deg"))),
-                active=("sum", (~F.col("halted")).cast("long")),
             )
             return Superstep(
                 nxt,
-                stats,
-                stats["msgs_out"] == 0 and stats["active"] == 0,
+                {**stats, "active": 0},
+                stats["msgs_out"] == 0,
                 partitions=parts,
             )
 

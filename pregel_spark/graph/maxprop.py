@@ -65,7 +65,6 @@ PROGRAM = VertexProgram(
     combine="max",
     apply=lambda value, msg: F.greatest(value, msg),
     send=lambda old, new, superstep: F.when((superstep == 1) | (new > old), new),
-    halt=True,
 )
 
 

@@ -57,6 +57,7 @@ from .engine import (
     bsp_loop_confs,
     materialize,
     materialize_step,
+    resume_point,
     run_supersteps,
 )
 from .skew import salted_sum
@@ -325,7 +326,7 @@ def pagerank(
     dm = 0.0
     # a resume replaces the start vector and its dangling mass with the
     # checkpoint's state and meta: build neither
-    if not (resume and ckpt is not None and ckpt.latest() is not None):
+    if resume_point(ckpt, resume) is None:
         ranks = ranks.persist()
         if warm is not None:
             tot = ranks.agg(F.sum("rank").alias("t")).collect()[0]["t"] or 1.0
